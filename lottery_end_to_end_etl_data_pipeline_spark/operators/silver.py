@@ -14,7 +14,9 @@ Reference parity (`transformer.py:151-266`, SURVEY §1.2/§2.1):
   (transformer.py:244-248).
 - incremental guard (S4): the reference set-differences discovered
   draw ids against already-processed ones (s3_utils.py:46-58,
-  transformer.py:92-118) — here a left-anti join, fully distributed.
+  transformer.py:92-118). `plans.pipeline` does the same on the driver
+  from the `sorteo=N` path segments; the left-anti join here is the
+  content-level guard behind it, for files outside that layout.
 
 Scale notes: `partitionBy("year", "sorteo")` gives automatic partition
 pruning downstream; dynamic partition overwrite keeps re-runs
@@ -23,8 +25,9 @@ idempotent without the reference's purge Lambda (SURVEY §4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lottery_end_to_end_etl_data_pipeline_spark.functions.coercion import (
     coerce_date_ddmmyyyy,
@@ -34,7 +37,10 @@ from lottery_end_to_end_etl_data_pipeline_spark.functions.coercion import (
 )
 from lottery_end_to_end_etl_data_pipeline_spark.schemas import (
     PREMIOS_COLUMNS,
+    PREMIOS_SCHEMA,
+    SILVER_PARTITION_FIELDS,
     SORTEOS_COLUMNS,
+    SORTEOS_SCHEMA,
 )
 
 
@@ -108,8 +114,8 @@ def with_partitions(sorteos: DataFrame, premios: DataFrame, strict: bool = True
 
 
 def filter_unprocessed(discovered: DataFrame, silver_sorteos: DataFrame | None) -> DataFrame:
-    """S4 incremental guard as a left-anti join (replaces
-    s3_utils.py:46-58's driver-side set difference)."""
+    """S4 incremental guard on content: a left-anti join on the parsed
+    draw id, behind the driver-side set difference on file paths."""
     if silver_sorteos is None:
         return discovered
     seen = silver_sorteos.select(F.col("numero_sorteo").alias("_seen_id")).distinct()
@@ -130,29 +136,48 @@ def write_silver(
     Dynamic partition overwrite is set per-write so incremental
     re-runs only rewrite the partitions present in the batch, even
     under a foreign SparkSession whose `partitionOverwriteMode` is
-    left at the static default (which would wipe the whole table)."""
-    (
-        sorteos.select(*SORTEOS_COLUMNS, "year", "sorteo")
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "sorteo")
-        .parquet(f"{silver_path}/sorteos")
-    )
-    (
-        premios.select(*PREMIOS_COLUMNS, "year", "sorteo")
-        .write.mode(mode)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("year", "sorteo")
-        .parquet(f"{silver_path}/premios")
-    )
+    left at the static default (which would wipe the whole table).
+
+    Premios are written before sorteos, so a `sorteo=N` partition of
+    silver sorteos means draw N is complete: a run killed between the
+    two writes leaves N out of sorteos, and the next run (which takes
+    the processed ids from sorteos) writes N again, overwriting its
+    premios partition."""
+    for name, df, columns in (
+        ("premios", premios, PREMIOS_COLUMNS),
+        ("sorteos", sorteos, SORTEOS_COLUMNS),
+    ):
+        (
+            df.select(*columns, "year", "sorteo")
+            .write.mode(mode)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("year", "sorteo")
+            .parquet(f"{silver_path}/{name}")
+        )
     if simple_path:
         sorteos.select(*SORTEOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/sorteos")
         premios.select(*PREMIOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/premios")
 
 
-def register_silver(spark, silver_path: str) -> None:
+_SILVER_SCHEMAS = {
+    name: T.StructType(schema.fields + SILVER_PARTITION_FIELDS)
+    for name, schema in (("sorteos", SORTEOS_SCHEMA), ("premios", PREMIOS_SCHEMA))
+}
+
+
+def read_silver(spark: SparkSession, silver_path: str, table: str) -> DataFrame:
+    """One silver table (`sorteos` or `premios`) with its schema
+    supplied, so no schema-inference job reads parquet footers. The
+    listing and partition discovery run on the driver while no
+    directory level holds more than
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    entries; above that Spark lists in a job."""
+    return spark.read.schema(_SILVER_SCHEMAS[table]).parquet(f"{silver_path}/{table}")
+
+
+def register_silver(spark: SparkSession, silver_path: str) -> None:
     """Catalog registration replacing the Glue crawlers
     (catalog/main.tf:37-94): temp views over the partitioned layout,
-    with partition discovery + pruning for free."""
-    spark.read.parquet(f"{silver_path}/sorteos").createOrReplaceTempView("silver_sorteos")
-    spark.read.parquet(f"{silver_path}/premios").createOrReplaceTempView("silver_premios")
+    with partition discovery + pruning for free (see `read_silver`)."""
+    for table in ("sorteos", "premios"):
+        read_silver(spark, silver_path, table).createOrReplaceTempView(f"silver_{table}")

@@ -45,8 +45,14 @@ SORTEOS_SCHEMA = T.StructType(
 )
 
 # Partition columns appended at the Silver write boundary
-# (transformer.py:225-230 derives year; sorteo comes from the draw id).
-SILVER_PARTITION_COLS = ["year", "sorteo"]
+# (transformer.py:225-230 derives year; sorteo comes from the draw id),
+# typed as partition inference types the `year=`/`sorteo=` directory
+# names: int for every year and for draw ids below 2^31. Reading silver
+# with these fields supplied needs no schema-inference job.
+SILVER_PARTITION_FIELDS = [
+    T.StructField("year", T.IntegerType(), nullable=True),
+    T.StructField("sorteo", T.IntegerType(), nullable=True),
+]
 
 PREMIOS_COLUMNS = [f.name for f in PREMIOS_SCHEMA.fields]
 SORTEOS_COLUMNS = [f.name for f in SORTEOS_SCHEMA.fields]

@@ -23,6 +23,45 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cgroup_memory_limit(
+    proc_cgroup: str = "/proc/self/cgroup", root: str = "/sys/fs/cgroup"
+) -> int | None:
+    """The tightest memory limit on this process, in bytes, or None.
+
+    A process may sit in a nested cgroup (a systemd slice, a container
+    inside a container) whose limit the root files do not show, so the
+    process's own cgroup is resolved from ``proc_cgroup`` and every
+    ancestor up to ``root`` is read. cgroup v2 (`0::/path`) keeps
+    `memory.max` beside the path, "max" meaning no limit; v1 (the
+    `memory` controller line) keeps `memory.limit_in_bytes` under
+    `memory/`, no limit being a huge number that a min() ignores.
+    """
+    try:
+        with open(proc_cgroup) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    limits = []
+    for line in lines:
+        _, controllers, path = line.split(":", 2)
+        if controllers == "":
+            base, name = root, "memory.max"
+        elif "memory" in controllers.split(","):
+            base, name = os.path.join(root, "memory"), "memory.limit_in_bytes"
+        else:
+            continue
+        parts = [p for p in path.split("/") if p]
+        for depth in range(len(parts) + 1):
+            try:
+                with open(os.path.join(base, *parts[:depth], name)) as f:
+                    raw = f.read().strip()
+            except OSError:
+                continue
+            if raw.isdigit():
+                limits.append(int(raw))
+    return min(limits, default=None)
+
+
 def get_session(
     app_name: str = "lottery-spark-engine",
     master: str | None = None,
@@ -63,20 +102,10 @@ def get_session(
         # In a container, physical RAM overstates what the JVM may
         # use (r12 ADVICE, medium): a memory-capped cgroup below
         # ~RAM/5 would let -Xmx exceed the cap and get the JVM
-        # OOM-killed. Take min(cgroup limit, physical RAM); cgroup v2
-        # writes "max" (no limit) as text, v1 encodes it as a huge
-        # number that the min() ignores naturally.
-        for limit_file in (
-            "/sys/fs/cgroup/memory.max",  # v2
-            "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # v1
-        ):
-            try:
-                raw = open(limit_file).read().strip()
-                if raw.isdigit():
-                    total_bytes = min(total_bytes, int(raw))
-                break
-            except OSError:
-                continue
+        # OOM-killed. Take min(cgroup limit, physical RAM).
+        limit = _cgroup_memory_limit()
+        if limit is not None:
+            total_bytes = min(total_bytes, limit)
         total_gib = total_bytes / (1024**3)
         driver_mem = f"{max(4, min(24, int(total_gib // 5)))}g"
 
