@@ -14,12 +14,17 @@ Scale notes: all 7 are hash aggregates with map-side partial agg;
 the 4 fact⋈dim joins broadcast the `sorteos` side (1 row/draw —
 orders of magnitude smaller than premios). Gold tables partitioned by
 `year` where the reference partitions (05/06/07) for downstream
-partition pruning.
+partition pruning. `build_all` overlaps the 7 writes (each table its
+own directory and jobs); `plans.pipeline` writes its `_silver_draws`
+marker only after all of them have succeeded.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lottery_end_to_end_etl_data_pipeline_spark.functions.expressions import safe_pct, terminacion
@@ -270,21 +275,33 @@ def gold_sql(premios_view: str = "silver_premios", sorteos_view: str = "silver_s
 
 
 def build_all(
-    premios: DataFrame,
-    sorteos: DataFrame,
-    gold_path: str | None = None,
-    spark: SparkSession | None = None,
+    premios: DataFrame, sorteos: DataFrame, gold_path: str | None = None
 ) -> dict[str, DataFrame]:
     """Build all 7 gold tables; optionally persist them partitioned as
-    the reference does (overwrite = the purge-free idempotent re-run)."""
-    out: dict[str, DataFrame] = {}
-    for name, builder in GOLD_BUILDERS.items():
-        df = builder(premios, sorteos)
-        out[name] = df
-        if gold_path:
-            writer = df.write.mode("overwrite")
-            parts = GOLD_PARTITIONS[name]
-            if parts:
-                writer = writer.partitionBy(*parts)
-            writer.parquet(f"{gold_path}/{name}")
+    the reference does (overwrite = the purge-free idempotent re-run).
+
+    The 7 writes are independent jobs over the same inputs, each into
+    its own directory, so they run concurrently, one thread per table.
+    Each thread carries the caller's Spark local properties (job group,
+    description), so its jobs are attributed to the caller. Every write
+    settles before this returns or raises the first failure."""
+    out = {name: builder(premios, sorteos) for name, builder in GOLD_BUILDERS.items()}
+    if gold_path:
+        with ThreadPoolExecutor(len(out)) as pool:
+            # Wrapped once per table: each write gets its own copy of
+            # the local properties, into which Spark sets its SQL
+            # execution id.
+            futures = [
+                pool.submit(
+                    inheritable_thread_target(premios.sparkSession)(_write_gold),
+                    df, f"{gold_path}/{name}", GOLD_PARTITIONS[name],
+                )
+                for name, df in out.items()
+            ]
+        for f in futures:
+            f.result()
     return out
+
+
+def _write_gold(df: DataFrame, path: str, parts: list[str]) -> None:
+    df.write.mode("overwrite").partitionBy(*parts).parquet(path)

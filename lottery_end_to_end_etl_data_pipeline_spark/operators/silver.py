@@ -15,8 +15,9 @@ Reference parity (`transformer.py:151-266`, SURVEY §1.2/§2.1):
 - incremental guard (S4): the reference set-differences discovered
   draw ids against already-processed ones (s3_utils.py:46-58,
   transformer.py:92-118). `plans.pipeline` does the same on the driver
-  from the `sorteo=N` path segments; the left-anti join here is the
-  content-level guard behind it, for files outside that layout.
+  from the `sorteo=N` path segments, and `filter_unprocessed` drops the
+  parsed rows of those listed ids, for files outside that layout: a
+  filter, so silver is never scanned.
 
 Scale notes: `partitionBy("year", "sorteo")` gives automatic partition
 pruning downstream; dynamic partition overwrite keeps re-runs
@@ -24,6 +25,8 @@ idempotent without the reference's purge Lambda (SURVEY §4).
 """
 
 from __future__ import annotations
+
+from collections.abc import Collection
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,15 +116,14 @@ def with_partitions(sorteos: DataFrame, premios: DataFrame, strict: bool = True
     return s, p
 
 
-def filter_unprocessed(discovered: DataFrame, silver_sorteos: DataFrame | None) -> DataFrame:
-    """S4 incremental guard on content: a left-anti join on the parsed
-    draw id, behind the driver-side set difference on file paths."""
-    if silver_sorteos is None:
+def filter_unprocessed(discovered: DataFrame, done: Collection[int]) -> DataFrame:
+    """S4 incremental guard on content: drop the rows whose parsed draw
+    id is in ``done``, the ids listed from silver's `sorteo=N`
+    partition directories (`sorteo` is `numero_sorteo`, see
+    `with_partitions`). Lists over 10 ids become a hash `InSet`."""
+    if not done:
         return discovered
-    seen = silver_sorteos.select(F.col("numero_sorteo").alias("_seen_id")).distinct()
-    return discovered.join(
-        seen, discovered["numero_sorteo"] == seen["_seen_id"], "left_anti"
-    )
+    return discovered.filter(~F.col("numero_sorteo").isin(sorted(done)))
 
 
 def write_silver(

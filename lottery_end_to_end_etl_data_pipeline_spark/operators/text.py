@@ -340,13 +340,6 @@ def bigrams_of(toks_col: Column) -> Column:
     )
 
 
-def word_bigrams(text: Column | str) -> Column:
-    """Adjacent word 2-grams of the whitespace tokenization. For hot
-    paths prefer projecting `tokens(text)` to a column first and
-    calling `bigrams_of` on it (see its docstring)."""
-    return bigrams_of(tokens(text))
-
-
 def repetition_features(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

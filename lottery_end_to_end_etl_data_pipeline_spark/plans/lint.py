@@ -216,12 +216,6 @@ def _is_double(e) -> bool:
         return False
 
 
-def _unwrap_cast(e):
-    while e.getClass().getSimpleName() == "Cast":
-        e = e.children().apply(0)
-    return e
-
-
 def _resolve_source(e, env, depth: int = 16):
     """Unwrap casts/aliases AND chase attribute references through
     the plan alias environment until a source expression is reached —

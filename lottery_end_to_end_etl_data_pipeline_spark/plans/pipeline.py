@@ -10,18 +10,19 @@ difference (S3/S4, s3_utils.py:46-58), made from file listings with
 no Spark job: a raw file's draw id is its `sorteo=N` path segment, the
 processed ids are silver's `sorteos/year=*/sorteo=*` partition
 directories, and only raw files whose id is not in silver are read. A
-file outside that layout is always read; the left-anti join against
-silver (S4) then drops any draw already processed.
+file outside that layout is always read; `filter_unprocessed` (S4)
+then drops the parsed rows of any listed id, so silver is listed but
+never scanned.
 
 Idempotent and re-runnable: writes use dynamic partition overwrite
 (no purge machinery), premios before sorteos, so a silver sorteos
 partition means its draw is complete. Gold is rebuilt with overwrite
-semantics; once all 7 tables are written, the `_silver_draws` marker
-under `gold_path` lists the silver draw ids they were built from, and
-gold is rebuilt only when that list differs from silver's. A run with
-no new file and current gold registers the silver views and returns:
-it reads, writes and rebuilds nothing, and leaves `simple_path` as the
-last batch left it.
+semantics, its 7 writes overlapping; once all of them are written,
+the `_silver_draws` marker under `gold_path` lists the silver draw ids
+they were built from, and gold is rebuilt only when that list differs
+from silver's. A run with no new file and current gold registers the
+silver views and returns: it reads, writes and rebuilds nothing, and
+leaves `simple_path` as the last batch left it.
 """
 
 from __future__ import annotations
@@ -41,7 +42,6 @@ from lottery_end_to_end_etl_data_pipeline_spark.operators.silver import (
     conform_premios,
     conform_sorteos,
     filter_unprocessed,
-    read_silver,
     register_silver,
     with_partitions,
     write_silver,
@@ -52,7 +52,7 @@ from lottery_end_to_end_etl_data_pipeline_spark.sources.bronze import (
 )
 
 GOLD_MARKER = "_silver_draws"  # `_`-prefixed: Spark and Hadoop readers skip it
-_DRAW_ID = re.compile(r"(?:^|/)sorteo=(\d+)(?=/|$)")
+_DRAW_ID = re.compile(r"(?:^|/)sorteo=(-?\d+)(?=/|$)")
 
 
 @dataclass
@@ -154,10 +154,9 @@ def run_pipeline(
         sorteos = conform_sorteos(sorteos_raw)
         premios = conform_premios(premios_raw)
 
-        if incremental and silver_exists:
-            existing = read_silver(spark, silver_path, "sorteos")
-            sorteos = filter_unprocessed(sorteos, existing)
-            premios = filter_unprocessed(premios, existing)
+        if incremental:
+            sorteos = filter_unprocessed(sorteos, done)
+            premios = filter_unprocessed(premios, done)
 
         sorteos, premios = with_partitions(sorteos, premios, strict=strict)
         if dq_enforce:

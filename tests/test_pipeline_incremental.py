@@ -6,6 +6,7 @@ same 5-draw corpus: silver and all 7 gold tables, `exceptAll` empty
 both ways."""
 
 import shutil
+import threading
 
 import pytest
 from pyspark.sql import DataFrameWriter
@@ -122,7 +123,7 @@ def test_registered_schemas_equal_inferred(spark, weekly):
 
 def test_file_outside_layout_is_ingested_once(spark, backfilled, full, tmp_path_factory):
     """Files in `inbox/` carry no `sorteo=N` segment: every run reads
-    them, and the anti-join drops the draws already in silver."""
+    them, and the guard drops the draws already in silver."""
     root = backfilled
     draws = write_fixture_corpus(tmp_path_factory.mktemp("texts"), n_draws=5, seed=3)
     inbox = root / "raw" / "inbox"
@@ -141,17 +142,29 @@ def test_file_outside_layout_is_ingested_once(spark, backfilled, full, tmp_path_
 
 def _kill_at_write(monkeypatch, n, under):
     """Make the ``n``-th parquet write to a path containing ``under``
-    raise, as if the run were killed there."""
-    write, seen = DataFrameWriter.parquet, []
+    raise, as if the run were killed there. Returns the list of paths
+    whose write has returned. Gold writes run on concurrent threads, so
+    both lists are kept under a lock."""
+    write, seen, written, lock = DataFrameWriter.parquet, [], [], threading.Lock()
 
     def killing(self, path, *args, **kwargs):
         if under in str(path):
-            seen.append(path)
-            if len(seen) == n:
+            with lock:
+                seen.append(path)
+                killed = len(seen) == n
+            if killed:
                 raise RuntimeError(f"killed before writing {path}")
-        return write(self, path, *args, **kwargs)
+        write(self, path, *args, **kwargs)
+        with lock:
+            written.append(str(path))
 
     monkeypatch.setattr(DataFrameWriter, "parquet", killing)
+    return written
+
+
+def _drain_listeners(spark):
+    """Wait until the status tracker has seen every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
 
 def test_killed_between_silver_writes_converges(spark, backfilled, full, monkeypatch):
@@ -170,12 +183,65 @@ def test_killed_between_silver_writes_converges(spark, backfilled, full, monkeyp
 
 
 def test_killed_during_gold_converges(spark, backfilled, full, monkeypatch):
+    """One gold table's write fails while the others run: `run_pipeline`
+    raises only once no write is left running, and leaves the marker
+    stale, so the next run rebuilds gold."""
     root = backfilled
     write_fixture_corpus(root / "raw", n_draws=5, seed=3)
-    _kill_at_write(monkeypatch, 5, "/gold/")  # 4 of the 7 tables rewritten
+    written = _kill_at_write(monkeypatch, 1, "/gold/gold_time_series")
     with pytest.raises(RuntimeError, match="killed"):
         _run(spark, root)
+    assert len([p for p in written if "/gold/" in p]) == len(GOLD_BUILDERS) - 1
+    _drain_listeners(spark)
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     monkeypatch.undo()
+    silver_ids = "\n".join(map(str, sorted(pipeline._silver_draw_ids(spark, f"{root}/silver"))))
+    assert (root / "gold" / pipeline.GOLD_MARKER).read_text() != silver_ids
 
     assert _run(spark, root).new_draws == 0  # silver is complete
     _assert_same_tables(spark, root, full)
+
+
+def test_weekly_run_job_budget(spark, backfilled, monkeypatch):
+    """A weekly +1 run starts at most 24 Spark jobs, all in the
+    caller's job group (gold's concurrent writes included), and never
+    scans silver: its content guard is a filter on the listed ids."""
+    root = backfilled
+    write_fixture_corpus(root / "raw", n_draws=5, seed=3)
+    sc, group = spark.sparkContext, "weekly-probe"
+    tracker = sc.statusTracker()
+
+    def group_jobs():
+        _drain_listeners(spark)
+        return list(tracker.getJobIdsForGroup(group))
+
+    guarded, partition_jobs = [], []
+    filter_unprocessed, with_partitions = pipeline.filter_unprocessed, pipeline.with_partitions
+
+    def recording_filter(df, done):
+        guarded.append(filter_unprocessed(df, done))
+        return guarded[-1]
+
+    def counting_partitions(*args, **kwargs):
+        before = len(group_jobs())
+        out = with_partitions(*args, **kwargs)
+        partition_jobs.append(len(group_jobs()) - before)
+        return out
+
+    monkeypatch.setattr(pipeline, "filter_unprocessed", recording_filter)
+    monkeypatch.setattr(pipeline, "with_partitions", counting_partitions)
+    _drain_listeners(spark)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "weekly +1 run_pipeline")
+    try:
+        assert _run(spark, root).new_draws == 1
+        jobs = group_jobs()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the tracker keeps only the latest jobs, so old ids may drop out
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert 0 < len(jobs) <= 24, jobs
+    assert partition_jobs == [1]
+    assert len(guarded) == 2
+    assert not [f for df in guarded for f in df.inputFiles() if "/silver/" in f]
