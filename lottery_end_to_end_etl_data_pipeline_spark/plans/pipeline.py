@@ -183,5 +183,5 @@ def run_pipeline(
                 spark.table("silver_premios"), spark.table("silver_sorteos"), gold_path
             )
             _write_text(spark, marker, built_from)
-        result.gold_tables = sorted(gold_mod.GOLD_BUILDERS)
+        result.gold_tables = sorted(gold_mod.GOLD_TABLES)
     return result

@@ -1,20 +1,36 @@
 """Gold end-to-end: fixture corpus → silver parquet → 7 gold tables,
-cross-checked three ways: DataFrame builder vs Spark SQL vs DuckDB
-oracle running the identical SQL on the same parquet (the reference's
-intended correctness contract, SURVEY §5)."""
+cross-checked three ways on the same silver parquet: the gold table
+Spark wrote, that table read back by DuckDB, and DuckDB running the
+identical SQL text as an oracle (the reference's intended correctness
+contract, SURVEY §5). The written schemas are pinned too."""
 
 import duckdb
 import pytest
+from pyspark.sql.types import StructType
 
-from lottery_end_to_end_etl_data_pipeline_spark.operators.gold import (
-    GOLD_BUILDERS,
-    gold_sql,
-)
+from lottery_end_to_end_etl_data_pipeline_spark.operators.gold import GOLD_TABLES
 from lottery_end_to_end_etl_data_pipeline_spark.plans.pipeline import run_pipeline
 
-from tests.compare import assert_same, spark_rows
+from tests.compare import assert_same, duck_rows
 
 from tests.fixture_gen import write_fixture_corpus
+
+#: Schemas of the written gold tables as read back (parquet read-back
+#: makes every column nullable); partition columns come last.
+GOLD_SCHEMAS = {
+    "gold_draw_summary": "numero_sorteo BIGINT, tipo_sorteo STRING, fecha_sorteo DATE, "
+    "total_premios BIGINT, premios_vendidos BIGINT, premios_no_vendidos BIGINT, "
+    "pct_vendido DOUBLE, total_monto DOUBLE, monto_pagado DOUBLE, top_premio DOUBLE",
+    "gold_winning_number_frequency": "numero_premiado BIGINT, veces_ganador BIGINT, "
+    "total_monto DOUBLE, max_monto DOUBLE",
+    "gold_terminations": "terminacion STRING, veces_ganador BIGINT, total_monto DOUBLE",
+    "gold_letters_distribution": "letras STRING, veces_ganador BIGINT, total_monto DOUBLE",
+    "gold_geo_winnings": "departamento STRING, ciudad STRING, num_ganadores BIGINT, "
+    "total_monto DOUBLE, year INT",
+    "gold_vendor_leaderboard": "vendedor STRING, num_premios BIGINT, total_monto DOUBLE, year INT",
+    "gold_time_series": "month INT, num_sorteos BIGINT, num_premios BIGINT, "
+    "total_monto DOUBLE, year INT",
+}
 
 
 @pytest.fixture(scope="module")
@@ -36,22 +52,26 @@ def silver(spark, tmp_path_factory):
     con.execute(
         f"CREATE VIEW silver_premios AS SELECT * FROM read_parquet('{root}/silver/premios/**/*.parquet', hive_partitioning=1)"
     )
-    return spark, con
+    return spark, con, root / "gold"
 
 
-@pytest.mark.parametrize("name", sorted(GOLD_BUILDERS))
+@pytest.mark.parametrize("name", sorted(GOLD_TABLES))
 def test_gold_three_way(silver, name):
-    spark, con = silver
-    df_form = GOLD_BUILDERS[name](
-        spark.table("silver_premios"), spark.table("silver_sorteos")
+    spark, con, gold = silver
+    written = spark.read.parquet(f"{gold}/{name}")
+    oracle = con.sql(GOLD_TABLES[name][0].format(premios="silver_premios", sorteos="silver_sorteos"))
+    assert_same(written, oracle, label=f"{name}: Spark vs DuckDB")
+    read_back = con.sql(
+        f"SELECT * FROM read_parquet('{gold}/{name}/**/*.parquet', hive_partitioning=1)"
     )
-    sql_text = gold_sql()[name]
-    sql_form = spark.sql(sql_text)
-    # DataFrame vs Spark SQL
-    assert spark_rows(df_form) == spark_rows(sql_form), f"{name}: DF != SQL form"
-    # Spark vs DuckDB oracle (same SQL text, Presto-free dialect)
-    duck_sql = sql_text.replace(" AS STRING", " AS VARCHAR")
-    assert_same(df_form, con.sql(duck_sql), label=name)
+    assert duck_rows(read_back) == duck_rows(oracle), f"{name}: DuckDB read-back"
+
+
+def test_gold_written_schemas(silver):
+    spark, _, gold = silver
+    for name, ddl in GOLD_SCHEMAS.items():
+        got = spark.read.parquet(f"{gold}/{name}").schema
+        assert got == StructType.fromDDL(ddl), f"{name}: {got.simpleString()}"
 
 
 def test_incremental_rerun_is_noop(spark, tmp_path):

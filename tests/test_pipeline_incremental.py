@@ -11,14 +11,14 @@ import threading
 import pytest
 from pyspark.sql import DataFrameWriter
 
-from lottery_end_to_end_etl_data_pipeline_spark.operators.gold import GOLD_BUILDERS
+from lottery_end_to_end_etl_data_pipeline_spark.operators.gold import GOLD_TABLES
 from lottery_end_to_end_etl_data_pipeline_spark.plans import pipeline
 from lottery_end_to_end_etl_data_pipeline_spark.plans.pipeline import run_pipeline
 
 from tests.fixture_gen import write_fixture_corpus
 
 LAYOUT = "year=*/sorteo=*/*.txt"
-TABLES = ["silver/sorteos", "silver/premios"] + [f"gold/{n}" for n in sorted(GOLD_BUILDERS)]
+TABLES = ["silver/sorteos", "silver/premios"] + [f"gold/{n}" for n in sorted(GOLD_TABLES)]
 
 
 def _run(spark, root, glob=LAYOUT):
@@ -106,7 +106,7 @@ def test_noop_run_starts_no_job_and_writes_nothing(spark, weekly):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert (result.new_draws, result.new_premios) == (0, 0)
-    assert result.gold_tables == sorted(GOLD_BUILDERS)
+    assert result.gold_tables == sorted(GOLD_TABLES)
     assert jobs == [] and probe_jobs != []
     assert (_file_state(root / "silver"), _file_state(root / "gold")) == before
     assert spark.table("silver_sorteos").count() == 5
@@ -191,7 +191,7 @@ def test_killed_during_gold_converges(spark, backfilled, full, monkeypatch):
     written = _kill_at_write(monkeypatch, 1, "/gold/gold_time_series")
     with pytest.raises(RuntimeError, match="killed"):
         _run(spark, root)
-    assert len([p for p in written if "/gold/" in p]) == len(GOLD_BUILDERS) - 1
+    assert len([p for p in written if "/gold/" in p]) == len(GOLD_TABLES) - 1
     _drain_listeners(spark)
     assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
     monkeypatch.undo()
