@@ -274,31 +274,11 @@ def knn_join(
     )
 
 
-def _knn_join_arrow(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str,
-    c_id: str,
-    q_vec: str,
-    c_vec: str,
-    exclude_same_id: bool,
-) -> DataFrame:
-    """The mapInArrow scoring kernel behind knn_join(arrow_scoring=
-    True). See knn_join's docstring for the bit-identity argument;
-    everything order-sensitive (per-dimension accumulation, separate
-    multiply/add, norms-before-division) mirrors the Catalyst fold."""
-    q_rows = queries.select(q_id, q_vec).collect()
-    qids = [r[0] for r in q_rows]
-    qmat = [[float(x) for x in r[1]] for r in q_rows]
-    # query norms on the driver: plain-Python floats ARE IEEE doubles,
-    # and the sequential loop reproduces _norm's fold exactly
-    qnorms = []
-    for vec in qmat:
-        acc = 0.0
-        for x in vec:
-            acc = acc + x * x
-        qnorms.append(math.sqrt(acc))
+def _knn_scorer(qids: list, qmat: list, qnorms: list):
+    """The mapInArrow kernel of `_knn_join_arrow`: each corpus batch
+    (cid, embedding) → one (cid, qid, raw cosine) row per query.
+    Module-level so a test can feed it batches directly, sliced ones
+    included."""
 
     def score(batches):
         import numpy as np  # noqa: PLC0415
@@ -332,7 +312,9 @@ def _knn_join_arrow(
                     "knn_join arrow kernel requires fixed-dim non-null "
                     f"vectors of dim {dim}"
                 )
-            flat = emb.values.to_numpy(zero_copy_only=False).astype(
+            # flatten(), not .values: a sliced batch's list array
+            # keeps its parent's values and starts at an offset
+            flat = emb.flatten().to_numpy(zero_copy_only=False).astype(
                 np.float64
             )
             C = flat.reshape(n, dim)
@@ -357,9 +339,38 @@ def _knn_join_arrow(
                 schema=out_schema,
             )
 
+    return score
+
+
+def _knn_join_arrow(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    q_id: str,
+    c_id: str,
+    q_vec: str,
+    c_vec: str,
+    exclude_same_id: bool,
+) -> DataFrame:
+    """The mapInArrow scoring kernel behind knn_join(arrow_scoring=
+    True). See knn_join's docstring for the bit-identity argument;
+    everything order-sensitive (per-dimension accumulation, separate
+    multiply/add, norms-before-division) mirrors the Catalyst fold."""
+    q_rows = queries.select(q_id, q_vec).collect()
+    qids = [r[0] for r in q_rows]
+    qmat = [[float(x) for x in r[1]] for r in q_rows]
+    # query norms on the driver: plain-Python floats ARE IEEE doubles,
+    # and the sequential loop reproduces _norm's fold exactly
+    qnorms = []
+    for vec in qmat:
+        acc = 0.0
+        for x in vec:
+            acc = acc + x * x
+        qnorms.append(math.sqrt(acc))
+
     scored = corpus.select(
         F.col(c_id).cast("long").alias("cid"), F.col(c_vec).alias("_cv")
-    ).mapInArrow(score, "cid long, qid long, _rawcos double")
+    ).mapInArrow(_knn_scorer(qids, qmat, qnorms), "cid long, qid long, _rawcos double")
     if exclude_same_id:
         scored = scored.filter(F.col("qid") != F.col("cid"))
     scored = scored.withColumn("cosine", F.round(F.col("_rawcos"), 4))

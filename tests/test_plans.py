@@ -341,3 +341,122 @@ def test_column_profile_approx_frame_is_expand_free(spark):
     # the exact sibling DOES pay Expand — the contrast the docs claim
     exact_plan = plan_of(QUERIES["column_profile_all"](spark, SF))
     assert "Expand" in exact_plan
+
+
+def test_t_schema_equals_inferred(spark, tmp_path):
+    """`t()` reads with the footer's schema; it must be the schema
+    Spark infers, for every catalog table and for a Spark-written
+    directory table (part files plus `_SUCCESS`). `events.ts` is then
+    turned into a timestamp, in place."""
+    from pyspark.sql import types as T
+
+    from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (
+        TABLES,
+        t,
+    )
+
+    for name in TABLES:
+        want = spark.read.parquet(f"{SF}/{name}.parquet").schema
+        if name == "events":
+            want = T.StructType(
+                [T.StructField("ts", T.TimestampType()) if f.name == "ts" else f for f in want]
+            )
+        assert t(spark, SF, name).schema == want, name
+    path = str(tmp_path / "documents.parquet")
+    spark.read.parquet(f"{SF}/documents.parquet").repartition(3).write.parquet(path)
+    assert t(spark, str(tmp_path), "documents").schema == spark.read.parquet(path).schema
+    assert t(spark, str(tmp_path), "documents").count() == spark.read.parquet(path).count()
+    # a `_common_metadata` summary wins over the data files, as in Spark
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    summarized = tmp_path / "orders.parquet"
+    summarized.mkdir()
+    pq.write_table(pa.table({"a": [1]}), summarized / "part-0.parquet")
+    pq.write_metadata(pa.schema([("a", pa.int64()), ("b", pa.string())]), summarized / "_common_metadata")
+    assert t(spark, str(tmp_path), "orders").columns == ["a", "b"]
+    assert t(spark, str(tmp_path), "orders").schema == spark.read.parquet(str(summarized)).schema
+
+
+def test_t_and_events_stream_read_every_events_ts_form(spark, tmp_path):
+    """TIMESTAMP(NANOS), TIMESTAMP(MICROS) and NTZ `events.ts` all
+    come back as the same UTC instant, truncated to microseconds, and
+    the stream source gets the batch read's schema; session confs are
+    left as they were."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+
+    from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (
+        events_stream,
+        scoped_conf,
+        t,
+    )
+
+    wall = datetime.datetime(2024, 1, 1, 12, 0, 0, 123456)
+    want = int(wall.replace(tzinfo=datetime.timezone.utc).timestamp()) * 10**6 + 123456
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    forms = {
+        "nanos": pa.array([pa.scalar(wall, pa.timestamp("us")).value * 1000 + 789], pa.int64()).cast(pa.timestamp("ns")),
+        "micros": pa.array([wall], pa.timestamp("us", tz="UTC")),
+        "ntz": pa.array([wall], pa.timestamp("us")),
+    }
+    for form, ts in forms.items():
+        sf_dir = tmp_path / form
+        sf_dir.mkdir()
+        pq.write_table(pa.table({"ts": ts, "v": [1]}), sf_dir / "events.parquet", version="2.6")
+        before = spark.conf.get(key, None)
+        df = t(spark, str(sf_dir), "events")
+        assert spark.conf.get(key, None) == before
+        assert dict(df.dtypes)["ts"] == "timestamp", form
+        assert df.select(F.unix_micros("ts")).first()[0] == want, form
+        with scoped_conf(spark, key, before or "false"):  # the nanos form sets it for the stream
+            assert events_stream(spark, str(sf_dir)).schema == df.schema, form
+
+
+def test_t_sees_a_rewritten_table(spark, tmp_path):
+    """No schema is kept between calls: a table rewritten with another
+    schema is read with the new one by the next `t()`."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import t
+
+    path = tmp_path / "lineitem.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert t(spark, str(tmp_path), "lineitem").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = t(spark, str(tmp_path), "lineitem")
+    assert df.schema == spark.read.parquet(str(path)).schema
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_t_missing_table_raises_at_construction(spark, tmp_path):
+    from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import t
+
+    with pytest.raises(Exception, match="does not exist"):
+        t(spark, str(tmp_path), "orders")
+
+
+def test_catalog_construction_job_budget(spark):
+    """Building `star_join_revenue` and the 7 `gold_*_shape` entries
+    starts no Spark job: every table schema comes from its footer on
+    the driver, not from a schema-inference job."""
+    from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import QUERIES
+
+    names = ["star_join_revenue"] + [n for n in QUERIES if n.startswith("gold_") and n.endswith("_shape")]
+    assert len(names) == 8
+    sc, group = spark.sparkContext, "construct-probe"
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, "build catalog entries")
+    try:
+        for name in names:
+            QUERIES[name](spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(tracker.getJobIdsForGroup(group)) == []

@@ -37,6 +37,30 @@ def test_knn_brute_exact_order(vectors):
     assert got[0][1] == round(0.9 / math.sqrt(0.81 + 0.01), 4)
 
 
+
+def test_knn_arrow_kernel_scores_a_sliced_batch_like_the_whole():
+    """A sliced batch's embedding list array starts at an offset into
+    its parent's values; the kernel must score the slice's own rows."""
+    import pyarrow as pa
+
+    from lottery_end_to_end_etl_data_pipeline_spark.operators.similarity import _knn_scorer
+
+    rows = [[1.0, 0.0, 0.0], [0.9, 0.1, 0.0], [0.0, 1.0, 0.0], [-1.0, 0.5, 0.0], [0.7, 0.7, 0.2]]
+    qmat = [[1.0, 0.0, 0.0], [0.0, 0.6, 0.8]]
+    score = _knn_scorer([10, 11], qmat, [math.sqrt(sum(x * x for x in q)) for q in qmat])
+    batch = pa.record_batch(
+        [pa.array(range(5), pa.int64()), pa.array(rows, pa.list_(pa.float64()))],
+        names=["cid", "_cv"],
+    )
+
+    def scored(b):
+        (out,) = list(score(iter([b])))
+        return out.to_pylist()
+
+    whole = scored(batch)
+    assert scored(batch.slice(2, 3)) == whole[2 * 2 :]
+    assert scored(batch.slice(1, 2)) == whole[1 * 2 : 3 * 2]
+
 def test_knn_lsh_subset_of_corpus(vectors):
     got = knn_lsh(vectors, [1.0, 0.0, 0.0, 0.0], k=5, n_planes=2, exclude_id=0).collect()
     # approximate: returns only same-bucket vectors, scored exactly
