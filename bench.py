@@ -1,16 +1,26 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""The catalog harness: the one timing protocol, the one comparison
+rule and the one entry-build loop. `tools/bench_sf1.py`,
+`tools/scaling_probe.py` and the plan inspectors (`dump_plans`,
+`plan_audit`, `lambda_agg_scan`, `round_risk_scan`) import them.
 
-Prints ONE JSON line:
+    python bench.py              # HEADLINE at $SPARK_GRAFT_SF_DIR
+    python bench.py name [...]   # only the named entries; writes nothing
+
+With no arguments it prints ONE JSON line:
   {"metric": "headline_queries_total", "value": <sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <dir>}
+and writes the full record to BENCH_DETAIL.json. With names it prints
+their record, compared with BENCH_DETAIL.json by the same rule.
 
-Timing excludes session startup; each query is materialized via
-collect() (results are aggregate-sized). Run order is fixed; first
-query absorbs JVM warm-up, so headline totals are conservative.
+Timing excludes session startup and warm-up; each entry is
+materialized via collect() (results are aggregate-sized).
+$SPARK_GRAFT_BENCH_PASSES (at least 2) sets the number of passes.
 """
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import sys
@@ -21,6 +31,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import QUERIES  # noqa: E402
+
+WARM_SF = "/root/testdata/sf0.001"
+DETAIL_PATH = Path(__file__).with_name("BENCH_DETAIL.json")
 
 HEADLINE = [
     "star_join_revenue",
@@ -298,167 +311,213 @@ def is_contended(control: float, dispersion_p50: float) -> bool:
     return control > 1.15 or dispersion_p50 > 1.25
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_session("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+def env_passes() -> int:
+    return max(2, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
 
-    # Warm the JVM + file listing outside the timed region, JMH-style:
-    # run the whole headline list once at the SMALLEST SF so every
-    # query's one-time Janino codegen + JIT compilation happens before
-    # timing. The timed region then measures steady-state operator
-    # throughput at sf_dir — which is the quantity that scales to a
-    # long-lived cluster — not the first-ever compilation of each
-    # generated class (measured 1-6 s per query of pure compile cost
-    # on the widest plans, identical at every data scale).
-    QUERIES["gold_letters_shape"](spark, sf_dir).collect()
-    warm_sf = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_sf):
-        for warm_q in HEADLINE:
-            if warm_q in QUERIES:
+
+def collect(df) -> None:
+    df.collect()
+
+
+def noop(df) -> None:
+    """Materialize every column at full engine throughput without a
+    driver-side collect: for outputs of tens of millions of rows,
+    where collect() would time Python deserialization, not the plan."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+@contextlib.contextmanager
+def job_description(spark, name: str):
+    """Tag the Spark jobs started inside the block with ``name``, so an
+    event log or the UI attributes them to the entry."""
+    sc = spark.sparkContext
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(None)
+
+
+def time_entries(spark, entries, sf_dirs, passes, sink=collect):
+    """The one timing protocol. ``entries`` maps names to catalog
+    builders ``(spark, sf_dir) -> DataFrame``. Returns
+    ``{sf_dir: {name: [seconds of each pass]}}``.
+
+    Each entry first runs once at WARM_SF, outside timing, JMH-style:
+    its one-time Janino codegen and JIT compilation (1-6 s on the
+    widest plans, the same at every scale) then happen before the timed
+    passes, which measure steady-state throughput. A warm-up failure
+    never fails the run. Then ``passes`` full passes over the entries
+    run at each sf dir; the caller keeps the per-entry best, because a
+    single measurement cannot tell a regression from contention noise
+    (round 5 recorded 16 phantom >30% regressions on untouched code)."""
+    if os.path.isdir(WARM_SF):
+        for name, build in entries.items():
+            with job_description(spark, name):
                 try:
-                    QUERIES[warm_q](spark, warm_sf).collect()
+                    sink(build(spark, WARM_SF))
                 except Exception:
-                    pass  # warm-up must never fail the bench
+                    pass
+    times: dict[str, dict[str, list[float]]] = {}
+    for sf_dir in sf_dirs:
+        for p in range(passes):
+            for name, build in entries.items():
+                with job_description(spark, name):
+                    t0 = time.monotonic()
+                    sink(build(spark, sf_dir))
+                    dt = round(time.monotonic() - t0, 3)
+                times.setdefault(sf_dir, {}).setdefault(name, []).append(dt)
+                print(f"{sf_dir} pass {p + 1}/{passes} {name}: {dt}s", file=sys.stderr)
+    return times
 
-    # Min-of-N protocol (round-6 verdict ask #4): a single measurement
-    # per query cannot distinguish a real regression from single-session
-    # contention noise (round 5 recorded 16 phantom >30% "regressions"
-    # on untouched code). N full passes over the list, per-query best
-    # kept as the measurement and max/min as a dispersion diagnostic —
-    # a query is only flagged against the previous round if its BEST
-    # run regressed.
-    passes = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
-    t_all: dict[str, list[float]] = {}
-    for _ in range(passes):
-        for name in HEADLINE:
-            if name not in QUERIES:
-                continue
-            t0 = time.monotonic()
-            QUERIES[name](spark, sf_dir).collect()
-            dt = round(time.monotonic() - t0, 3)
-            t_all.setdefault(name, []).append(dt)
-    timings = {k: min(v) for k, v in t_all.items()}
-    t_max = {k: max(v) for k, v in t_all.items()}
+
+def _p50(values) -> float:
+    ordered = sorted(values)
+    return ordered[len(ordered) // 2] if ordered else 1.0
+
+
+def record(pass_times, prev_path: Path, metric: str, sf: str, **reported) -> dict:
+    """The one comparison rule: per-entry min-of-N against the record
+    at ``prev_path``, with dispersion max/min over the passes.
+
+    Per-entry ratios are divided by a machine-drift control: the median
+    ratio over the entries the previous record timed above 0.5 s. A
+    real regression is isolated, so the median tracks the environment,
+    not the defect (r10: the whole box ran ~1.15x slower and min-of-2
+    flagged 16 phantom regressions), and it needs no fixed entry list.
+    The control is clamped to >= 1 so a faster machine never hides a
+    regression. An entry regressed when its min exceeds 1.3x its
+    previous time times the control; entries under 0.5 s are noise.
+    A control above 1.15 is flagged as its own entry: in that window
+    the normalization relaxes every gate (1.3x raw becomes up to
+    ~1.7x), where a shared-helper regression slowing many entries
+    could normalize itself away, so it must be adjudicated.
+
+    ``reported`` are extra numbers recorded as given."""
+    timings = {k: min(v) for k, v in pass_times.items()}
     dispersion = {
-        k: round(t_max[k] / timings[k], 2) if timings[k] > 0 else 1.0
-        for k in timings
+        k: round(max(v) / timings[k], 2) if timings[k] > 0 else 1.0
+        for k, v in pass_times.items()
     }
-
-    # Regressions vs the previous recorded round, computed on min-of-N
-    # and NORMALIZED by the reference-pipeline CONTROL: the 7-gold
-    # pipeline's code is stable round over round, so its min-of-N
-    # ratio vs the previous record measures pure machine/environment
-    # drift (r10: the whole box ran ~1.15x slower than the r9 window
-    # and min-of-2 flagged 16 phantom per-entry "regressions" — the
-    # exact failure mode the protocol comment above records from
-    # round 5). Per-entry ratios are divided by the control factor
-    # (clamped to >= 1 so a FASTER machine never hides a real
-    # regression); the factor itself is recorded, and a control
-    # factor > 1.15 is surfaced as its own entry so a shared-library
-    # slowdown cannot silently normalize itself away.
-    prev_path = Path(__file__).with_name("BENCH_DETAIL.json")
-    prev_queries: dict = {}
-    prev_ref = 0.0
-    if prev_path.exists():
-        try:
-            _prev = json.loads(prev_path.read_text())
-            prev_queries = _prev.get("queries", {})
-            prev_ref = float(_prev.get("reference_pipeline_sec", 0.0))
-        except Exception:
-            prev_queries = {}
-    ref_now = sum(timings.get(q, 0.0) for q in REFERENCE_PIPELINE)
-    control = max(1.0, ref_now / prev_ref) if prev_ref > 0.5 else 1.0
+    try:
+        prev = json.loads(prev_path.read_text()).get("queries", {})
+    except (OSError, ValueError):
+        prev = {}
+    base = {k: prev[k] for k in timings if prev.get(k, 0) > 0.5}
+    control = max(1.0, _p50(timings[k] / base[k] for k in base)) if base else 1.0
     regressions = sorted(
         (
-            (k, round(timings[k] / (prev_queries[k] * control), 2))
-            for k in timings
-            if prev_queries.get(k, 0) > 0.5
-            and timings[k] > 1.3 * prev_queries[k] * control
+            [k, round(timings[k] / (base[k] * control), 2)]
+            for k in base
+            if timings[k] > 1.3 * base[k] * control
         ),
         key=lambda kv: -kv[1],
     )
-    # Surface the control well below the per-entry flag threshold
-    # (r10 review): in the 1.15-1.3 window the normalization relaxes
-    # every per-entry gate (1.3x raw becomes up to ~1.7x), which is
-    # exactly where a shared-helper regression that also slows the
-    # gold pipeline could hide — so a control that large must be
-    # visible and adjudicated (environment vs code), not silent.
     if control > 1.15:
-        regressions.insert(0, ("reference_pipeline_CONTROL", round(control, 2)))
-
-    # The driver captures only the TAIL of stdout; round 3's full
-    # per-query dict overflowed that window and the line's head
-    # ("metric"/"value") was lost -> parsed=null. Keep the printed
-    # line compact (slowest 25 queries only, 2-decimal, no spaces)
-    # and write the full per-query detail to BENCH_DETAIL.json.
-    ref_pipeline_sec = round(
-        sum(timings.get(q, 0.0) for q in REFERENCE_PIPELINE), 3
-    )
-    detail = {
-        "metric": "headline_queries_total",
+        regressions.insert(0, ["median_drift_CONTROL", round(control, 2)])
+    return {
+        "metric": metric,
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "passes": passes,
-        "reference_pipeline_sec": ref_pipeline_sec,
+        "passes": max(map(len, pass_times.values()), default=0),
+        **reported,
         "machine_control_factor": round(control, 3),
         "queries": timings,
         "dispersion_max_over_min": dispersion,
-        # Per-entry PER-PASS times (r10 verdict #4): the min-of-N
-        # protocol alone cannot say WHICH pass stalled or whether a
-        # dispersion spike was one transient event vs systematic —
-        # r10's dispersion_max 8.06 (map_functions_surface) was
-        # un-adjudicable without these. Full list kept; it is the
-        # primary dispersion-forensics record.
-        "pass_times": t_all,
-        "regressions_vs_prev": [list(kv) for kv in regressions],
-        "sf": sf_dir,
+        # per-pass times say WHICH pass stalled, and whether a
+        # dispersion spike was one transient event or systematic
+        "pass_times": pass_times,
+        "regressions_vs_prev": regressions,
+        "sf": sf,
+        "quarantined": is_contended(control, _p50(dispersion.values())),
     }
-    # Contention guard (r11 verdict #2): the r11 record was taken at
-    # control 1.21 / dispersion_p50 1.39 and, once committed, poisoned
-    # every later comparison (phantom improvements, hidden regressions
-    # up to ~1.5x). A run that measures ITSELF as contended must not
-    # become the new baseline: write the full detail to a quarantine
-    # file instead and keep the committed record. Thresholds: the
-    # control is the stable 7-gold pipeline's drift vs the committed
-    # record (>1.15 = the box is slow), dispersion_p50 is the median
-    # per-entry max/min over passes (>1.25 = the run itself was noisy).
-    disp_vals = sorted(dispersion.values())
-    disp_p50 = disp_vals[len(disp_vals) // 2] if disp_vals else 1.0
-    quarantined = is_contended(control, disp_p50)
-    record_path = (
-        prev_path.with_name("BENCH_DETAIL.quarantine.json")
-        if quarantined
-        else prev_path
-    )
-    detail["quarantined"] = quarantined
-    record_path.write_text(json.dumps(detail, indent=1) + "\n")
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:25]
-    )
-    disp_sorted = sorted(dispersion.values())
-    compact = {
-        "metric": "headline_queries_total",
+
+
+def publish(pass_times, path: Path, metric: str, sf: str, **reported) -> dict:
+    """Write the ``record`` of ``pass_times`` against ``path`` and
+    return its compact line. A run that measured itself as contended
+    writes ``<stem>.quarantine.json`` and leaves ``path`` unchanged: a
+    contended record, once committed, poisons every later comparison.
+
+    The compact line carries the slowest 25 entries at 2 decimals: it
+    is parsed from the tail of stdout, and a full per-entry dict once
+    pushed the line's head ("metric"/"value") out of that tail."""
+    detail = record(pass_times, path, metric, sf, **reported)
+    if detail["quarantined"]:
+        path = path.with_name(f"{path.stem}.quarantine.json")
+    path.write_text(json.dumps(detail, indent=1) + "\n")
+    timings, dispersion = detail["queries"], detail["dispersion_max_over_min"]
+    slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:25]
+    return {
+        "metric": metric,
         "value": detail["value"],
         "unit": "sec",
         "n_queries": len(timings),
-        "passes": passes,
+        "passes": detail["passes"],
         "sec_per_query": round(detail["value"] / max(len(timings), 1), 3),
-        "reference_pipeline_sec": ref_pipeline_sec,
-        "machine_control_factor": round(control, 3),
-        "dispersion_p50": disp_sorted[len(disp_sorted) // 2] if disp_sorted else 1.0,
-        "dispersion_max": disp_sorted[-1] if disp_sorted else 1.0,
+        **reported,
+        "machine_control_factor": detail["machine_control_factor"],
+        "dispersion_p50": _p50(dispersion.values()),
+        "dispersion_max": max(dispersion.values(), default=1.0),
         "dispersion_max_entry": (
             max(dispersion, key=dispersion.get) if dispersion else None
         ),
-        "regressions_vs_prev": [list(kv) for kv in regressions[:10]],
-        "quarantined": quarantined,
-        "queries": {k: round(v, 2) for k, v in slowest.items()},
-        "queries_file": "BENCH_DETAIL.json",
-        "sf": sf_dir,
+        "regressions_vs_prev": detail["regressions_vs_prev"][:10],
+        "quarantined": detail["quarantined"],
+        "queries": {k: round(v, 2) for k, v in slowest},
+        "queries_file": path.name,
+        "sf": sf,
     }
+
+
+def formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def inspect_entries(spark, names, sf_dir, inspect):
+    """The one build loop of the plan inspectors. Builds each named
+    catalog entry at ``sf_dir`` and applies ``inspect`` to its frame,
+    with the Spark jobs of both tagged with the name. Yields
+    ``(name, inspect(frame), None)``, or ``(name, None, exc)`` when
+    building or inspecting raised. Entries that run side effects when
+    built (streaming drains, index writes, k-means training) run them
+    here, exactly as the correctness mirror does."""
+    for name in names:
+        with job_description(spark, name):
+            try:
+                result, error = inspect(QUERIES[name](spark, sf_dir)), None
+            except Exception as exc:  # noqa: BLE001
+                result, error = None, exc
+        yield name, result, error
+
+
+def main(names: list[str]) -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_session("bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    # warm the JVM and the file listing at the timed sf
+    QUERIES["gold_letters_shape"](spark, sf_dir).collect()
+    entries = {name: QUERIES[name] for name in names or HEADLINE}
+    pass_times = time_entries(spark, entries, [sf_dir], env_passes())[sf_dir]
+    ref_pipeline_sec = round(
+        sum(min(pass_times[q]) for q in REFERENCE_PIPELINE if q in pass_times), 3
+    )
+    if names:
+        detail = record(
+            pass_times, DETAIL_PATH, "named_entries_total", sf_dir,
+            reference_pipeline_sec=ref_pipeline_sec,
+        )
+        print(json.dumps(detail, indent=1))
+        return
+    compact = publish(
+        pass_times, DETAIL_PATH, "headline_queries_total", sf_dir,
+        reference_pipeline_sec=ref_pipeline_sec,
+    )
     print(json.dumps(compact, separators=(",", ":")))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -130,10 +130,11 @@ def write_silver(
     sorteos: DataFrame,
     premios: DataFrame,
     silver_path: str,
-    simple_path: str | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """S5/S6 sinks: Hive-partitioned canonical + optional flat copy.
+    """S6 sink: silver as Hive-partitioned (year, sorteo) parquet. The
+    reference's flat per-draw 'simple bucket' (S5) is
+    `sources/writers.py::write_parquet_flat`.
 
     Dynamic partition overwrite is set per-write so incremental
     re-runs only rewrite the partitions present in the batch, even
@@ -156,9 +157,6 @@ def write_silver(
             .partitionBy("year", "sorteo")
             .parquet(f"{silver_path}/{name}")
         )
-    if simple_path:
-        sorteos.select(*SORTEOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/sorteos")
-        premios.select(*PREMIOS_COLUMNS).write.mode(mode).parquet(f"{simple_path}/premios")
 
 
 _SILVER_SCHEMAS = {

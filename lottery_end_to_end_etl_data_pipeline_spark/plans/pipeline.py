@@ -21,8 +21,12 @@ semantics, its 7 writes overlapping; once all of them are written,
 the `_silver_draws` marker under `gold_path` lists the silver draw ids
 they were built from, and gold is rebuilt only when that list differs
 from silver's. A run with no new file and current gold registers the
-silver views and returns: it reads, writes and rebuilds nothing, and
-leaves `simple_path` as the last batch left it.
+silver views and returns: it reads, writes and rebuilds nothing.
+
+The parse and partition checks are always strict, as in the
+reference: a raw file missing a sentinel or a required header field,
+or a draw whose fecha_sorteo does not parse, fails the run before
+anything is written.
 """
 
 from __future__ import annotations
@@ -115,9 +119,7 @@ def run_pipeline(
     raw_glob: str,
     silver_path: str,
     gold_path: str | None = None,
-    simple_path: str | None = None,
     incremental: bool = True,
-    strict: bool = True,
     dq_enforce: bool = False,
 ) -> PipelineResult:
     """One end-to-end batch run (the weekly cron body, minus AWS).
@@ -150,7 +152,7 @@ def run_pipeline(
         raw = read_raw_draws(
             spark, raw_glob if len(new_files) == len(raw_files) else new_files
         )
-        sorteos_raw, premios_raw = parse_draws(raw, strict=strict)
+        sorteos_raw, premios_raw = parse_draws(raw)
         sorteos = conform_sorteos(sorteos_raw)
         premios = conform_premios(premios_raw)
 
@@ -158,18 +160,18 @@ def run_pipeline(
             sorteos = filter_unprocessed(sorteos, done)
             premios = filter_unprocessed(premios, done)
 
-        sorteos, premios = with_partitions(sorteos, premios, strict=strict)
+        sorteos, premios = with_partitions(sorteos, premios)
         if dq_enforce:
             validate_silver(sorteos, premios, enforce=True)
 
         # The parse lineage runs in the strict checks of parse_draws and
-        # with_partitions (one job each when strict) and in the silver
+        # with_partitions (one job each) and in the silver
         # writes; the batch sizes come from Observations riding the
         # writes, not from extra counts. An empty batch's
         # dynamic-partition write touches no partition.
         sorteos, s_obs = observed(sorteos, "sorteos_write", {"n_rows": F.count(F.lit(1))})
         premios, p_obs = observed(premios, "premios_write", {"n_rows": F.count(F.lit(1))})
-        write_silver(sorteos, premios, silver_path, simple_path=simple_path, mode="overwrite")
+        write_silver(sorteos, premios, silver_path, mode="overwrite")
         n_draws = int(s_obs.get["n_rows"])
         n_premios = int(p_obs.get["n_rows"])
 

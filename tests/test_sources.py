@@ -10,6 +10,7 @@ from lottery_end_to_end_etl_data_pipeline_spark.sources.readers import (
 )
 from lottery_end_to_end_etl_data_pipeline_spark.sources.writers import (
     write_csv,
+    write_parquet_flat,
     write_parquet_partitioned,
 )
 
@@ -29,6 +30,17 @@ def test_multipath_parquet_union(spark, tmp_path):
     spark.createDataFrame([(2,)], ["x"]).write.parquet(str(tmp_path / "p2"))
     got = read_parquet(spark, str(tmp_path / "p1"), str(tmp_path / "p2"))
     assert sorted(r["x"] for r in got.collect()) == [1, 2]
+
+
+def test_flat_parquet_roundtrip(spark, tmp_path):
+    """S5: the flat sink writes no partition directories, and overwrite
+    replaces the whole directory."""
+    path = str(tmp_path / "flat")
+    write_parquet_flat(spark.createDataFrame([(1, "a")], ["id", "name"]), path)
+    write_parquet_flat(spark.createDataFrame([(2, "b"), (3, "c")], ["id", "name"]), path)
+    assert not [p for p in (tmp_path / "flat").iterdir() if p.is_dir()]
+    back = read_parquet(spark, path)
+    assert sorted((r["id"], r["name"]) for r in back.collect()) == [(2, "b"), (3, "c")]
 
 
 def test_partitioned_write_layout(spark, tmp_path):

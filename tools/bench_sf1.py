@@ -1,16 +1,16 @@
-"""Standing sf1 bench gate (round-7 verdict ask #6): run the 30 most
-data-bound headline queries at sf1 (~10x sf0.1, built deterministically
-by tools/make_sf1.py) under the same min-of-2 / dispersion / regression
-protocol as bench.py, writing BENCH_SF1.json at the repo root.
+"""Standing sf1 bench gate (round-7 verdict ask #6): time the most
+data-bound headline entries at sf1 (~10x sf0.1, built deterministically
+by tools/make_sf1.py) with bench.py's timing protocol and comparison
+rule, writing BENCH_SF1.json at the repo root.
 
 Purpose: catch SUPERLINEAR DRIFT as a per-round gate instead of a probe
 doc — the sf0.1 headline bench cannot see a query whose constant is
 fine but whose exponent crept up (docs/SCALING.md flagged
 sessionize_batch_30m b_hi +0.83, paragraph_dedup_reassembly +0.74,
-column_profile_all +0.77; all three are in this gate's list). A query
-is flagged when its min-of-2 at sf1 regresses >30% against the
-previous round's recorded min-of-2 — `regressions_vs_prev: []` is the
-green state.
+column_profile_all +0.77; all three are in this gate's list).
+`regressions_vs_prev: []` is the green state. A run that measured
+itself as contended writes BENCH_SF1.quarantine.json instead and leaves
+BENCH_SF1.json unchanged.
 
 Usage: python tools/bench_sf1.py          # builds localdata/sf1 if absent
 """
@@ -18,15 +18,14 @@ Usage: python tools/bench_sf1.py          # builds localdata/sf1 if absent
 from __future__ import annotations
 
 import json
-import os
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(_REPO))
 
+from bench import env_passes, publish, time_entries  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (  # noqa: E402
     QUERIES,
@@ -100,84 +99,9 @@ def main() -> None:
         )
     spark = get_session("bench_sf1")
     spark.sparkContext.setLogLevel("ERROR")
-    # warm pass at sf0.01: Janino codegen + JIT outside the timed region
-    warm = "/root/testdata/sf0.01"
-    if os.path.isdir(warm):
-        for name in SF1_QUERIES:
-            if name in QUERIES:
-                try:
-                    QUERIES[name](spark, warm).collect()
-                except Exception:
-                    pass
-
-    passes = max(2, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))
-    t_min: dict[str, float] = {}
-    t_max: dict[str, float] = {}
-    for p in range(passes):
-        for name in SF1_QUERIES:
-            if name not in QUERIES:
-                continue
-            t0 = time.monotonic()
-            QUERIES[name](spark, str(sf1)).collect()
-            dt = round(time.monotonic() - t0, 3)
-            t_min[name] = min(t_min.get(name, dt), dt)
-            t_max[name] = max(t_max.get(name, dt), dt)
-            print(f"pass {p + 1}/{passes} {name}: {dt}s", file=sys.stderr)
-
-    out_path = _REPO / "BENCH_SF1.json"
-    prev: dict = {}
-    if out_path.exists():
-        try:
-            prev = json.loads(out_path.read_text()).get("queries", {})
-        except Exception:
-            prev = {}
-    # Machine-drift control (r10, mirroring bench.py's reference-
-    # pipeline normalization): the MEDIAN per-entry ratio vs the
-    # previous record estimates whole-box drift — a real regression is
-    # isolated, so the median tracks the environment, not the defect.
-    # Clamped to >= 1 so a faster machine never hides a regression;
-    # recorded, and surfaced as its own flag above 1.15.
-    ratios = sorted(
-        t_min[k] / prev[k] for k in t_min if prev.get(k, 0) > 0.5
-    )
-    control = max(1.0, ratios[len(ratios) // 2]) if ratios else 1.0
-    regressions = sorted(
-        (
-            (k, round(t_min[k] / (prev[k] * control), 2))
-            for k in t_min
-            if prev.get(k, 0) > 0.5 and t_min[k] > 1.3 * prev[k] * control
-        ),
-        key=lambda kv: -kv[1],
-    )
-    # Surfaced well below the per-entry threshold (r10 review): a
-    # shared-helper regression slowing MANY gate entries inflates the
-    # median and would otherwise normalize itself away in the
-    # 1.15-1.3 window; a control that large is always shown so it
-    # gets adjudicated (environment vs code) rather than trusted.
-    if control > 1.15:
-        regressions.insert(0, ("median_drift_CONTROL", round(control, 2)))
-    dispersion = {
-        k: round(t_max[k] / t_min[k], 2) if t_min[k] > 0 else 1.0
-        for k in t_min
-    }
-    disp_sorted = sorted(dispersion.values())
-    out = {
-        "metric": "sf1_gate_total",
-        "value": round(sum(t_min.values()), 3),
-        "unit": "sec",
-        "n_queries": len(t_min),
-        "passes": passes,
-        "sec_per_query": round(sum(t_min.values()) / max(len(t_min), 1), 3),
-        "dispersion_p50": disp_sorted[len(disp_sorted) // 2] if disp_sorted else 1.0,
-        "dispersion_max": disp_sorted[-1] if disp_sorted else 1.0,
-        "regressions_vs_prev": [list(kv) for kv in regressions],
-        "machine_control_factor": round(control, 3),
-        "queries": t_min,
-        "sf": str(sf1),
-    }
-    out_path.write_text(json.dumps(out, indent=1) + "\n")
-    compact = {k: out[k] for k in out if k != "queries"}
-    compact["queries_file"] = "BENCH_SF1.json"
+    entries = {name: QUERIES[name] for name in SF1_QUERIES}
+    pass_times = time_entries(spark, entries, [str(sf1)], env_passes())[str(sf1)]
+    compact = publish(pass_times, _REPO / "BENCH_SF1.json", "sf1_gate_total", str(sf1))
     print(json.dumps(compact, separators=(",", ":")))
 
 

@@ -20,8 +20,6 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import sys
 from pathlib import Path
 
@@ -33,10 +31,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 # calls).
 from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
 
+from bench import formatted_plan, inspect_entries  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
-from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (  # noqa: E402
-    QUERIES,
-)
 
 
 def main() -> int:
@@ -50,35 +46,31 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = Path(__file__).resolve().parent.parent / args.out
     out_dir.mkdir(parents=True, exist_ok=True)
-    for name in args.names:
-        pre_ckpt: list[str] = []
-        orig_ckpt = DataFrame.localCheckpoint
+    pre_ckpt: list[str] = []
+    orig_ckpt = DataFrame.localCheckpoint
 
-        def capture_ckpt(self, *a, **kw):
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                self.explain("formatted")
-            pre_ckpt.append(buf.getvalue())
-            return orig_ckpt(self, *a, **kw)
+    def capture_ckpt(self, *a, **kw):
+        pre_ckpt.append(formatted_plan(self))
+        return orig_ckpt(self, *a, **kw)
 
-        DataFrame.localCheckpoint = capture_ckpt
-        try:
-            df = QUERIES[name](spark, args.sf)
-        finally:
-            DataFrame.localCheckpoint = orig_ckpt
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        sections = [buf.getvalue()]
-        for i, text in enumerate(pre_ckpt):
-            sections.append(
-                f"\n=== pre-checkpoint frame {i} "
-                f"(plan materialized by localCheckpoint during entry "
-                f"construction) ===\n{text}"
-            )
-        path = out_dir / f"{name}{args.suffix}"
-        path.write_text("".join(sections))
-        print(f"wrote {path} ({len(pre_ckpt)} pre-checkpoint frames)")
+    DataFrame.localCheckpoint = capture_ckpt
+    try:
+        for name, plan, err in inspect_entries(spark, args.names, args.sf, formatted_plan):
+            if err is not None:
+                raise err
+            sections = [plan]
+            for i, text in enumerate(pre_ckpt):
+                sections.append(
+                    f"\n=== pre-checkpoint frame {i} "
+                    f"(plan materialized by localCheckpoint during entry "
+                    f"construction) ===\n{text}"
+                )
+            path = out_dir / f"{name}{args.suffix}"
+            path.write_text("".join(sections))
+            print(f"wrote {path} ({len(pre_ckpt)} pre-checkpoint frames)")
+            pre_ckpt.clear()
+    finally:
+        DataFrame.localCheckpoint = orig_ckpt
     return 0
 
 

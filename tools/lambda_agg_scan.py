@@ -20,14 +20,13 @@ skipped.
 from __future__ import annotations
 
 import argparse
-import contextlib
-import io
 import re
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import formatted_plan, inspect_entries  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (  # noqa: E402
     QUERIES,
@@ -57,16 +56,11 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     names = args.names or sorted(QUERIES)
     n_flagged = 0
-    for name in names:
-        try:
-            df = QUERIES[name](spark, args.sf)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                df.explain("formatted")
-        except Exception as exc:  # noqa: BLE001
+    for name, plan, exc in inspect_entries(spark, names, args.sf, formatted_plan):
+        if exc is not None:
             print(f"SKIP  {name}: {type(exc).__name__}: {exc}", flush=True)
             continue
-        for head in flagged_aggs(buf.getvalue()):
+        for head in flagged_aggs(plan):
             n_flagged += 1
             print(f"FLAG  {name}: {head}", flush=True)
     print(f"done: {n_flagged} flagged operator(s)")

@@ -19,6 +19,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import inspect_entries  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.lint import lint_plan  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (  # noqa: E402
@@ -37,6 +38,14 @@ NODE_PATTERNS = {
 }
 
 
+def inventory(df) -> tuple[dict[str, int], str]:
+    """Node counts of the executed plan and the linter's rule list."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    counts = {k: len(re.findall(p, plan)) for k, p in NODE_PATTERNS.items()}
+    findings = lint_plan(df)
+    return counts, "; ".join(sorted({f.rule for f in findings}))
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -46,20 +55,11 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     rows = []
-    for name, fn in QUERIES.items():
-        try:
-            df = fn(spark, args.sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            counts = {
-                k: len(re.findall(p, plan)) for k, p in NODE_PATTERNS.items()
-            }
-            findings = lint_plan(df)
-            flags = (
-                "; ".join(sorted({f.rule for f in findings})) if findings else ""
-            )
-            rows.append((name, counts, flags, None))
-        except Exception as e:  # noqa: BLE001
-            rows.append((name, {}, "", str(e).splitlines()[0][:100]))
+    for name, found, err in inspect_entries(spark, QUERIES, args.sf, inventory):
+        if err is None:
+            rows.append((name, *found, None))
+        else:
+            rows.append((name, {}, "", str(err).splitlines()[0][:100]))
         print(f"audited {name}", flush=True)
 
     out = Path(__file__).resolve().parent.parent / "docs" / "PLAN_AUDIT.md"

@@ -26,6 +26,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import inspect_entries  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.lint import (  # noqa: E402
     lint_rounded_doubles,
@@ -130,10 +131,8 @@ def main() -> int:
     spark = get_session("round-risk-scan")
     names = args.queries or list(QUERIES)
     warns, infos, broken = [], [], []
-    for name in names:
-        try:
-            df = QUERIES[name](spark, args.sf)
-        except Exception as e:  # noqa: BLE001
+    for name, df, e in inspect_entries(spark, names, args.sf, lambda df: df):
+        if e is not None:
             # r09 continuation review: a bare skip classified ANY
             # build failure as "needs scratch state", so a genuinely
             # broken entry silently weakened the zero-warn gate.

@@ -39,11 +39,11 @@ import argparse
 import math
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import noop, time_entries  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark import get_session  # noqa: E402
 from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import (  # noqa: E402
     QUERIES,
@@ -174,42 +174,28 @@ def decade_check() -> int:
 
     spark = get_session("decade-check")
     spark.sparkContext.setLogLevel("ERROR")
-    for name in top:  # warm codegen/JIT at the smallest sf
-        try:
-            QUERIES[name](spark, SFS[0][2]).collect()
-        except Exception:
-            pass
 
     rows, flagged = [], []
+    dirs = [str(sf1), str(sf10)]
     for name in top:
-        ts, works, err = [], [], None
-        for sdir in (str(sf1), str(sf10)):
-            t0 = time.monotonic()
-            try:
-                # noop sink: materializes every column at full engine
-                # throughput WITHOUT driver-side collect/pickle — at
-                # sf10 some entries legitimately emit tens of millions
-                # of rows, and collect() would measure Python
-                # deserialization, not the plan being gated
-                QUERIES[name](spark, sdir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as e:  # an entry that cannot RUN at scale
-                err = f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"
-                break
-            ts.append(time.monotonic() - t0)
-            if name in _ALLOW_WORK:
-                # outside the timed window: size of the answer the
-                # allow-listed entry is bounded below by (r11 verdict
-                # #6 — the allow-list must be checkable, not trusted)
-                works.append(_ALLOW_WORK[name](QUERIES[name](spark, sdir)))
-        if err is not None:
+        try:
+            # one warmed pass per scale, on the noop sink: at sf10 some
+            # entries legitimately emit tens of millions of rows
+            timed = time_entries(spark, {name: QUERIES[name]}, dirs, 1, sink=noop)
+            ts = [timed[d][name][0] for d in dirs]
+            # outside the timed window: size of the answer the
+            # allow-listed entry is bounded below by (r11 verdict #6 —
+            # the allow-list must be checkable, not trusted)
+            works = [
+                _ALLOW_WORK[name](QUERIES[name](spark, d))
+                for d in dirs
+                if name in _ALLOW_WORK
+            ]
+        except Exception as e:  # an entry that cannot RUN at scale
             # failing at sf10 is the worst possible scaling result —
             # record it, flag it, keep sweeping the other entries
-            rows.append(
-                (name, ts[0] if ts else float("nan"), float("nan"),
-                 float("inf"), None)
-            )
+            err = f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"
+            rows.append((name, float("nan"), float("nan"), float("inf"), None))
             flagged.append(name)
             print(f"{name:32s} ERROR at scale: {err}", flush=True)
             continue
@@ -255,7 +241,7 @@ def decade_check() -> int:
     for name, t1, t10, b, b_norm in rows:
         bn = "—" if b_norm is None else f"{b_norm:+.2f}"
         if math.isinf(b):
-            lines.append(f"| `{name}` | {t1:.2f} | ERROR | — | — | FLAGGED |")
+            lines.append(f"| `{name}` | — | ERROR | — | — | FLAGGED |")
             continue
         status = (
             "allowed"
@@ -302,24 +288,12 @@ def main() -> None:
     spark = get_session("scaling-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm every probe at the smallest sf (codegen/JIT outside timing)
-    for name, _ in PROBES:
-        try:
-            (QUERIES.get(name) or EXTRA[name])(spark, sfs[0][2]).collect()
-        except Exception:
-            pass
-
+    entries = {name: QUERIES.get(name) or EXTRA[name] for name, _ in PROBES}
+    dirs = [sdir for _, _, sdir in sfs]
+    timed = time_entries(spark, entries, dirs, 2)  # best-of-2 damps scheduler noise
     rows = []
     for name, note in PROBES:
-        times = []
-        for _, _, sdir in sfs:
-            best = None
-            for _ in range(2):  # best-of-2 damps scheduler noise
-                t0 = time.monotonic()
-                (QUERIES.get(name) or EXTRA[name])(spark, sdir).collect()
-                dt = time.monotonic() - t0
-                best = dt if best is None else min(best, dt)
-            times.append(best)
+        times = [min(timed[d][name]) for d in dirs]
         xs = [math.log10(v) for _, v, _ in sfs]
         ys = [math.log10(t) for t in times]
         n = len(xs)
@@ -337,7 +311,8 @@ def main() -> None:
     span = "1000x" if len(sfs) == 4 else "100x"
     hdr_sf = " | ".join(f"sf{tag} s" for tag, _, _ in sfs)
     lines = [
-        "# Empirical scaling (local[32], best-of-2, warmed)\n",
+        f"# Empirical scaling ({spark.sparkContext.master}, "
+        f"{spark.sparkContext.defaultParallelism} cores, best-of-2, warmed)\n",
         f"\nWall time per query across a {span} input range and the fitted",
         "log-log exponent `b` in `t ~ sf^b` (full range) plus `b_hi`,",
         "the top-decade slope — the one the linear term dominates once",
@@ -346,7 +321,8 @@ def main() -> None:
         "scan behavior. Superlinear `b_hi` flags a plan review. The sf1",
         "point is deterministic 10x replication of sf0.1 with disjoint",
         "keys (`tools/make_sf1.py`). Generated by",
-        "`tools/scaling_probe.py`.\n",
+        "`tools/scaling_probe.py`; timed by `bench.py::time_entries`",
+        "(warmed once at sf0.001, `collect()`, min of 2 passes).\n",
         f"\n| query | shape | {hdr_sf} | b | b_hi |",
         "|---|---|" + "---|" * (len(sfs) + 2),
     ]

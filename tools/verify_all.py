@@ -8,7 +8,9 @@ Runs, in order (stopping on first failure):
   4. tools/round_risk_scan.py  (static round-of-double lint over every
      entry's output expressions — r09, VERDICT r8 #4)
   5. tools/plan_audit.py       (regenerates docs/PLAN_AUDIT.md)
-  6. bench.py                  (refreshes BENCH_DETAIL.json)
+  6. bench.py                  (refreshes BENCH_DETAIL.json, or writes
+     BENCH_DETAIL.quarantine.json when the run measured itself
+     contended; the catalog harness every timing tool shares)
   7. tools/scaling_probe.py --decade-check  (top-decade superlinear
      gate over the 10 most expensive BENCH_SF1 entries; r11, VERDICT
      r10 #5 — auto-skipped when localdata/sf10 is absent)
