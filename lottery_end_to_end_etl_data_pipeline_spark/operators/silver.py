@@ -6,12 +6,14 @@ Reference parity (`transformer.py:151-266`, SURVEY §1.2/§2.1):
   nullable (transformer.py:166-175).
 - sorteos: reintegros CSV split into 3 nullable longs padded with
   NULLs (transformer.py:182-204), prize numbers nullable longs,
-  dates dd/MM/yyyy coerce-to-NULL (transformer.py:213-222),
-  year partition from fecha_sorteo with a hard error when a draw has
-  no parseable date (transformer.py:225-229).
+  dates dd/MM/yyyy coerce-to-NULL (transformer.py:213-222).
+- partitions: year from fecha_sorteo, with a hard error when a draw
+  has no parseable date (transformer.py:225-229). Each premio row
+  carries its draw's fecha_sorteo from the parse, so both tables take
+  the year from their own rows, as the reference does per file.
 - writes: Hive-partitioned parquet `year=/sorteo=/`
-  (transformer.py:253-258) plus the optional flat "simple" copy
-  (transformer.py:244-248).
+  (transformer.py:253-258); the flat "simple" copy
+  (transformer.py:244-248) is `sources/writers.py::write_parquet_flat`.
 - incremental guard (S4): the reference set-differences discovered
   draw ids against already-processed ones (s3_utils.py:46-58,
   transformer.py:92-118). `plans.pipeline` does the same on the driver
@@ -48,7 +50,9 @@ from lottery_end_to_end_etl_data_pipeline_spark.schemas import (
 
 
 def conform_premios(premios_raw: DataFrame) -> DataFrame:
-    """Apply the premios Silver contract (transformer.py:164-175)."""
+    """Apply the premios Silver contract (transformer.py:164-175). The
+    draw's fecha_sorteo rides along for `with_partitions`; `write_silver`
+    does not write it."""
     df = premios_raw
     for c in ("letras", "vendedor", "ciudad", "departamento"):
         df = df.withColumn(c, normalize_na(F.col(c)))
@@ -60,6 +64,7 @@ def conform_premios(premios_raw: DataFrame) -> DataFrame:
         F.col("vendedor").cast("string").alias("vendedor"),
         F.col("ciudad").cast("string").alias("ciudad"),
         F.col("departamento").cast("string").alias("departamento"),
+        coerce_date_ddmmyyyy("fecha_sorteo").alias("fecha_sorteo"),
     )
 
 
@@ -85,35 +90,28 @@ def conform_sorteos(sorteos_raw: DataFrame) -> DataFrame:
     )
 
 
-def with_partitions(sorteos: DataFrame, premios: DataFrame, strict: bool = True
-                    ) -> tuple[DataFrame, DataFrame]:
-    """Derive the (year, sorteo) partition columns (transformer.py:225-230).
+def with_partitions(sorteos: DataFrame, premios: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Derive the (year, sorteo) partition columns of both tables from
+    each row's own fecha_sorteo and numero_sorteo (transformer.py:225-230):
+    a per-row projection, no join.
 
     The reference refuses to write a draw whose fecha_sorteo could not
-    be parsed (cannot derive the year partition). strict=True keeps
-    that contract, touching only the offending draw ids.
+    be parsed (cannot derive the year partition); the check collects
+    only the offending draw ids.
     """
-    if strict:
-        bad = (
-            sorteos.filter(F.col("fecha_sorteo").isNull())
-            .select("numero_sorteo")
-            .limit(20)
-            .collect()
-        )
-        if bad:
-            ids = ", ".join(str(r["numero_sorteo"]) for r in bad)
-            raise ValueError(
-                f"Invalid fecha_sorteo for sorteo={ids}. Cannot derive year partition."
-            )
-    s = sorteos.withColumn("year", F.year("fecha_sorteo").cast("int")).withColumn(
-        "sorteo", F.col("numero_sorteo")
+    bad = (
+        sorteos.filter(F.col("fecha_sorteo").isNull())
+        .select("numero_sorteo")
+        .limit(20)
+        .collect()
     )
-    # premios gets its year from the owning draw (broadcast-sized dim:
-    # 1 row per draw).
-    p = premios.join(
-        F.broadcast(s.select("numero_sorteo", "year")), "numero_sorteo", "left"
-    ).withColumn("sorteo", F.col("numero_sorteo"))
-    return s, p
+    if bad:
+        ids = ", ".join(str(r["numero_sorteo"]) for r in bad)
+        raise ValueError(
+            f"Invalid fecha_sorteo for sorteo={ids}. Cannot derive year partition."
+        )
+    partitions = {"year": F.year("fecha_sorteo").cast("int"), "sorteo": F.col("numero_sorteo")}
+    return sorteos.withColumns(partitions), premios.withColumns(partitions)
 
 
 def filter_unprocessed(discovered: DataFrame, done: Collection[int]) -> DataFrame:

@@ -23,10 +23,11 @@ they were built from, and gold is rebuilt only when that list differs
 from silver's. A run with no new file and current gold registers the
 silver views and returns: it reads, writes and rebuilds nothing.
 
-The parse and partition checks are always strict, as in the
-reference: a raw file missing a sentinel or a required header field,
-or a draw whose fecha_sorteo does not parse, fails the run before
-anything is written.
+As in the reference, a raw file missing a sentinel or a required
+header field (`parse_draws`), or a draw whose fecha_sorteo does not
+parse (`with_partitions`), fails the run before anything is written.
+Each premio row carries its draw's fecha_sorteo from the parse, so both
+silver tables take their year partition from their own rows.
 """
 
 from __future__ import annotations
@@ -119,7 +120,6 @@ def run_pipeline(
     raw_glob: str,
     silver_path: str,
     gold_path: str | None = None,
-    incremental: bool = True,
     dq_enforce: bool = False,
 ) -> PipelineResult:
     """One end-to-end batch run (the weekly cron body, minus AWS).
@@ -127,23 +127,12 @@ def run_pipeline(
     ``dq_enforce=True`` runs the silver expectation suite as a
     blocking gate before any write (the reference's planned PR-033
     wiring) — a DataQualityError aborts the run with nothing written.
-
-    ``incremental=False`` reads every raw file and rewrites the draws
-    it holds, then rebuilds gold.
     """
     raw_files = _list(spark, raw_glob)
     fs, silver_sorteos = _fs_path(spark, f"{silver_path}/sorteos")
     silver_exists = fs.exists(silver_sorteos)
-    marker = f"{gold_path}/{GOLD_MARKER}"
-    if incremental:
-        done = _silver_draw_ids(spark, silver_path)
-        new_files = [f for f in raw_files if _draw_id(f) not in done]
-    else:
-        new_files = raw_files
-        if gold_path is not None:
-            # processed draws get rewritten: gold is stale until rebuilt
-            fs, p = _fs_path(spark, marker)
-            fs.delete(p, False)
+    done = _silver_draw_ids(spark, silver_path)
+    new_files = [f for f in raw_files if _draw_id(f) not in done]
 
     n_draws = n_premios = 0
     if new_files or not silver_exists:
@@ -155,20 +144,18 @@ def run_pipeline(
         sorteos_raw, premios_raw = parse_draws(raw)
         sorteos = conform_sorteos(sorteos_raw)
         premios = conform_premios(premios_raw)
-
-        if incremental:
-            sorteos = filter_unprocessed(sorteos, done)
-            premios = filter_unprocessed(premios, done)
+        sorteos = filter_unprocessed(sorteos, done)
+        premios = filter_unprocessed(premios, done)
 
         sorteos, premios = with_partitions(sorteos, premios)
         if dq_enforce:
             validate_silver(sorteos, premios, enforce=True)
 
-        # The parse lineage runs in the strict checks of parse_draws and
-        # with_partitions (one job each) and in the silver
-        # writes; the batch sizes come from Observations riding the
-        # writes, not from extra counts. An empty batch's
-        # dynamic-partition write touches no partition.
+        # The parse lineage runs in the checks of parse_draws and
+        # with_partitions (one job each) and in the silver writes; the
+        # batch sizes come from Observations riding the writes, not
+        # from extra counts. An empty batch's dynamic-partition write
+        # touches no partition.
         sorteos, s_obs = observed(sorteos, "sorteos_write", {"n_rows": F.count(F.lit(1))})
         premios, p_obs = observed(premios, "premios_write", {"n_rows": F.count(F.lit(1))})
         write_silver(sorteos, premios, silver_path, mode="overwrite")
@@ -180,6 +167,7 @@ def run_pipeline(
 
     if gold_path is not None:
         built_from = "\n".join(str(i) for i in sorted(_silver_draw_ids(spark, silver_path)))
+        marker = f"{gold_path}/{GOLD_MARKER}"
         if _read_text(spark, marker) != built_from:
             gold_mod.build_all(
                 spark.table("silver_premios"), spark.table("silver_sorteos"), gold_path

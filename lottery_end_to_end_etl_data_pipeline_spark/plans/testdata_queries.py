@@ -18843,10 +18843,11 @@ def bronze_parser_roundtrip(spark, sf_dir):
     (`parser.py:7-126`) — as a driver-checked round-trip: synthesize
     Bronze draw documents from orders/lineitem with the vectorized
     scraper formatter (`format_bronze_documents`, byte-parity-pinned
-    to the scalar form), parse them back with `parse_draws`
-    (strict=True), and aggregate every parsed field; the oracle
-    computes the same aggregates DIRECTLY from the source rows, so
-    any sentinel/regex/forward-fill/split defect breaks the hash.
+    to the scalar form), parse them back with `parse_draws` (its
+    sentinel/header check included), and aggregate every parsed
+    field; the oracle computes the same aggregates DIRECTLY from the
+    source rows, so any sentinel/regex/forward-fill/split defect
+    breaks the hash.
     Per-field coverage: HEADER regexes (numero/tipo/fechas/premios/
     reintegros incl. space-strip), comma-strip money (format_number
     emits thousands separators), lpad'd numero_premiado, seller
@@ -18945,13 +18946,13 @@ def bronze_parser_roundtrip(spark, sf_dir):
         F.expr("o_orderkey div 100 % 10").alias("r3"),
         "body_rows",
     )
-    # Materialize the synthesized docs once: parse_draws fans out into
-    # 4+ jobs (two strict checks, header agg, premio agg), each of
-    # which would otherwise re-run the synthesis join+collect_list.
+    # Materialize the synthesized docs once: the docs are read by 3
+    # jobs (parse_draws' check, the header agg, the premio agg), each
+    # of which would otherwise re-run the synthesis join+collect_list.
     # Audit-sized here (one short row per draw); the production
     # ingest path reads Bronze from storage and needs no checkpoint.
     docs = format_bronze_documents(spec).localCheckpoint(eager=True)
-    headers, premios = parse_draws(docs, strict=True)
+    headers, premios = parse_draws(docs)
     # (Measured, r10: also checkpointing `headers` here LOSES ~1.5 s —
     # the eager materialization job costs more than the duplicate
     # header branches it would deduplicate at audit sizes.)

@@ -129,6 +129,8 @@ def get_session(
         # RAM-derived local-mode heap (see driver_mem above).
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
+        # setLogLevel does not silence the `[Stage N:==>` progress bars.
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

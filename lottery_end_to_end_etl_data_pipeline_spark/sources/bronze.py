@@ -37,12 +37,14 @@ folds) and embarrassingly parallel — NO exchange anywhere in the
 parse; a 100 TB Bronze corpus parses in one narrow stage. Per-file
 work is linear in lines plus O(prizes) pointer copies per prize/
 seller append (each draw ≤ ~2,000 lines — bounded). No driver-side
-loops; strict-mode validation inspects only *file names* of
-malformed inputs (bounded by failure count, not volume), and both
-strict validations share one scan.
+loops; the validation in `parse_draws` collects only the *file names*
+of malformed inputs, at most 20, in one ordered query.
 """
 
 from __future__ import annotations
+
+import operator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -252,7 +254,7 @@ def _parse_files(raw: DataFrame) -> DataFrame:
     # per row). A Generate's output is a runtime attribute that no
     # rule can substitute through, so each fold runs exactly ONCE per
     # file per scan branch — and column pruning drops the premios fold
-    # entirely on header-only branches (the strict checks and the
+    # entirely on header-only branches (the parse check and the
     # headers aggregate never pay for prize-array building). The
     # 1-element arrays never drop or multiply rows.
     step1 = raw.select(
@@ -313,6 +315,11 @@ def _parse_files(raw: DataFrame) -> DataFrame:
     )
 
 
+def _in_headers():
+    """True for a file that appears in `parse_headers` (see there)."""
+    return (F.col("n_hdr_lines") > 0) & F.col("body_pos").isNotNull()
+
+
 def parse_headers(parsed: DataFrame) -> DataFrame:
     """P2: one row per file with raw header fields (strings).
 
@@ -324,13 +331,11 @@ def parse_headers(parsed: DataFrame) -> DataFrame:
     counts every post-HEADER line while body_pos is still NULL, so a
     HEADER-without-BODY file has n_hdr_lines > 0 and must be excluded
     by the explicit body_pos check (r11 ADVICE — the fold rewrite had
-    dropped it, surfacing such files in the strict=False path with
-    fields regex-scraped from the whole file tail; n_hdr_lines stops
-    incrementing at BODY, so the conjunction exactly restores the
+    dropped it, surfacing such files with fields regex-scraped from
+    the whole file tail; n_hdr_lines stops incrementing at BODY, so
+    the conjunction exactly restores the
     both-sentinels-plus-non-empty-slice contract)."""
-    return parsed.filter(
-        (F.col("n_hdr_lines") > 0) & F.col("body_pos").isNotNull()
-    ).select(
+    return parsed.filter(_in_headers()).select(
         "file",
         "numero_sorteo",
         "tipo_sorteo",
@@ -346,18 +351,19 @@ def parse_headers(parsed: DataFrame) -> DataFrame:
 def parse_bodies(parsed: DataFrame) -> DataFrame:
     """P3+P4: prize rows with seller attribution, one row per prize
     line, via a single narrow explode of the per-file premios array
-    (the header fan-out P6 rides along — `numero_sorteo` is already on
-    the same row, so no join). NULL-seller prizes keep NULL vendedor/
-    ciudad/departamento (the reference's pad-with-None expand,
-    parser.py:139-142); `numero_sorteo` is NULL when the file would
-    not appear in `headers` (empty header slice), matching the old
-    left join."""
+    (the header fan-out P6 rides along — `numero_sorteo` and the raw
+    `fecha_sorteo`, from which silver takes the year partition, are
+    already on the same row, so no join). NULL-seller prizes keep NULL
+    vendedor/ciudad/departamento (the reference's pad-with-None
+    expand, parser.py:139-142); both header fields are NULL when the
+    file would not appear in `headers` (empty header slice), matching
+    the old left join."""
     exploded = parsed.select(
         "file",
-        F.when(
-            (F.col("n_hdr_lines") > 0) & F.col("body_pos").isNotNull(),
-            F.col("numero_sorteo"),
-        ).alias("numero_sorteo"),
+        *(
+            F.when(_in_headers(), F.col(c)).alias(c)
+            for c in ("numero_sorteo", "fecha_sorteo")
+        ),
         F.explode("premios").alias("p"),
     )
     parts = F.split(F.col("p")["vendido_por"], ",")
@@ -374,6 +380,7 @@ def parse_bodies(parsed: DataFrame) -> DataFrame:
         F.trim(F.get(parts, 1)).alias("ciudad"),
         F.trim(F.get(parts, 2)).alias("departamento"),
         "numero_sorteo",
+        "fecha_sorteo",
     )
     # DE ESTA CAPITAL → departamento GUATEMALA (transformer.py:147-148)
     return with_split.withColumn(
@@ -385,17 +392,14 @@ def parse_bodies(parsed: DataFrame) -> DataFrame:
     )
 
 
-def parse_draws(
-    raw: DataFrame, strict: bool = True
-) -> tuple[DataFrame, DataFrame]:
+def parse_draws(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Parse raw draw documents into (sorteos_raw, premios_raw).
 
     Output columns are still strings where the reference's parser
     emits strings; `operators.silver.conform_*` applies the typed
-    Silver contract. ``strict=True`` reproduces the reference's
-    ValueError on files missing HEADER/BODY sentinels or required
-    header fields (parser.py:21-23, 53-55) by inspecting only the
-    offending *file names*.
+    Silver contract. Like the reference, a file missing its HEADER/
+    BODY sentinels or a required header field raises ValueError
+    (parser.py:21-23, 53-55), naming only the offending *file names*.
     """
     for col in _RAW_COLS:
         if col not in raw.columns:
@@ -403,68 +407,45 @@ def parse_draws(
 
     parsed = _parse_files(raw)
 
-    if strict:
-        # Both validations in ONE narrow scan (the all-good hot path
-        # was two full-corpus jobs): sentinel presence (parser.py:21-23)
-        # and required header fields (parser.py:53-55), collected
-        # together, sentinel errors reported first — same precedence
-        # as the sequential checks. Inspects only file NAMES of
-        # malformed inputs, never data volume.
-        required = [
-            "numero_sorteo",
-            "tipo_sorteo",
-            "fecha_sorteo",
-            "fecha_caducidad",
-            "primer_premio",
-            "reintegros",
-        ]
-        sent_bad = F.col("header_pos").isNull() | F.col("body_pos").isNull()
-        cond = None
-        for c in required:
-            expr = F.col(c).isNull()
-            cond = expr if cond is None else (cond | expr)
-        # header-format check applies to files that WOULD appear in
-        # `headers` (non-empty header slice), as in the two-job form
-        hdr_bad = (F.col("n_hdr_lines") > 0) & cond
-        bad = (
-            parsed.filter(sent_bad | hdr_bad)
-            .select("file", sent_bad.alias("sent_bad"))
-            .limit(40)
-            .collect()
-        )
-        if bad:
-            sent = [r["file"] for r in bad if r["sent_bad"]][:20]
-            if not sent and len(bad) == 40:
-                # the 40-row window held only header failures but a
-                # sentinel failure may exist beyond it — sentinel
-                # errors take precedence, so ask directly (rare path:
-                # >= 40 malformed files)
-                sent = [
-                    r["file"]
-                    for r in parsed.filter(sent_bad)
-                    .select("file")
-                    .limit(20)
-                    .collect()
-                ]
-            if sent:
-                raise ValueError(
-                    "The file does not contain expected HEADER or BODY "
-                    "sections: " + ", ".join(sent)
-                )
-            names = ", ".join(
-                [r["file"] for r in bad if not r["sent_bad"]][:20]
-            )
+    # Both validations in ONE bounded, ordered query: sentinel
+    # presence (parser.py:21-23) and required header fields
+    # (parser.py:53-55). Sentinel failures sort first, so they take
+    # precedence over header failures as in the sequential checks,
+    # however many header failures there are.
+    required = [
+        "numero_sorteo",
+        "tipo_sorteo",
+        "fecha_sorteo",
+        "fecha_caducidad",
+        "primer_premio",
+        "reintegros",
+    ]
+    sent_bad = F.col("header_pos").isNull() | F.col("body_pos").isNull()
+    # the header-format check applies to files that WOULD appear in
+    # `headers` (non-empty header slice)
+    hdr_bad = (F.col("n_hdr_lines") > 0) & reduce(
+        operator.or_, [F.col(c).isNull() for c in required]
+    )
+    bad = (
+        parsed.filter(sent_bad | hdr_bad)
+        .select("file", F.when(sent_bad, 0).otherwise(1).alias("kind"))
+        .orderBy("kind", "file")
+        .limit(20)
+        .collect()
+    )
+    if bad:
+        kind = bad[0]["kind"]
+        names = ", ".join(r["file"] for r in bad if r["kind"] == kind)
+        if kind == 0:
             raise ValueError(
-                f"The HEADER does not contain the expected format: {names}"
+                "The file does not contain expected HEADER or BODY sections: " + names
             )
-
-    headers = parse_headers(parsed)
+        raise ValueError(f"The HEADER does not contain the expected format: {names}")
 
     # Header fan-out (P6): the draw id is already on the per-file row,
     # so the fan-out is part of the same narrow explode — no join at
     # any scale (the old plan's file-keyed shuffle join is gone).
-    premios = parse_bodies(parsed)
-    return headers, premios
+    return parse_headers(parsed), parse_bodies(parsed)
 
 
 def format_bronze_document(

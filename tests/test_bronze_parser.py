@@ -10,7 +10,10 @@ from lottery_end_to_end_etl_data_pipeline_spark.operators.silver import (
     with_partitions,
 )
 from lottery_end_to_end_etl_data_pipeline_spark.sources.bronze import (
+    _parse_files,
+    parse_bodies,
     parse_draws,
+    parse_headers,
     read_raw_draws,
 )
 
@@ -78,22 +81,37 @@ def test_missing_sentinels_raise(spark, tmp_path):
         parse_draws(raw)
 
 
-def test_nonstrict_header_without_body_is_excluded(spark, tmp_path):
+def test_header_without_body_is_excluded(spark, tmp_path):
     # r11 ADVICE: the fold counts post-HEADER lines while body_pos is
     # still NULL, so a HEADER-without-BODY file has n_hdr_lines > 0 —
-    # the strict=False path must still exclude it (both-sentinels
-    # contract; the reference always rejects such files)
+    # the headers and the prize rows' header fields must still exclude
+    # it (both-sentinels contract; parse_draws rejects such files)
     p = tmp_path / "headeronly.txt"
     p.write_text(
         "HEADER\nSORTEO ORDINARIO NO. 1\n"
         "FECHA DEL SORTEO: 01/01/2024\nno body sentinel here\n"
     )
-    raw = read_raw_draws(spark, str(p))
-    sorteos_raw, premios_raw = parse_draws(raw, strict=False)
-    assert sorteos_raw.count() == 0
-    assert premios_raw.filter(
+    parsed = _parse_files(read_raw_draws(spark, str(p)))
+    assert parse_headers(parsed).count() == 0
+    assert parse_bodies(parsed).filter(
         F.col("numero_sorteo").isNotNull()
     ).count() == 0
+
+
+def test_sentinel_error_wins_past_the_check_limit(spark, tmp_path):
+    # more header failures than the check collects, and one sentinel
+    # failure whose name sorts after all of them: the sentinel error
+    # takes precedence and names that file
+    for i in range(45):
+        (tmp_path / f"a{i:02d}.txt").write_text(
+            "HEADER\ngibberish line with no fields\nBODY\n1 P .... 10.00\n"
+        )
+    (tmp_path / "z_no_body.txt").write_text("HEADER\nSORTEO ORDINARIO NO. 1\n")
+    raw = read_raw_draws(spark, str(tmp_path / "*.txt"))
+    with pytest.raises(ValueError, match="HEADER or BODY") as err:
+        parse_draws(raw)
+    assert "z_no_body.txt" in str(err.value)
+    assert "a00.txt" not in str(err.value)
 
 
 def test_malformed_header_raises(spark, tmp_path):

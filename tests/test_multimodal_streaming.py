@@ -84,8 +84,8 @@ def test_streaming_available_now_ingest(spark, tmp_path):
     def ingest(batch_df, epoch_id):
         if batch_df.isEmpty():
             return
-        s_raw, p_raw = parse_draws(batch_df, strict=False)
-        s, p = with_partitions(conform_sorteos(s_raw), conform_premios(p_raw), strict=False)
+        s_raw, p_raw = parse_draws(batch_df)
+        s, p = with_partitions(conform_sorteos(s_raw), conform_premios(p_raw))
         write_silver(s, p, str(tmp_path / "silver"), mode="append")
 
     stream = stream_raw_draws(spark, str(tmp_path / "raw" / "*" / "*"))

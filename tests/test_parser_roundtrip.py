@@ -74,7 +74,7 @@ def test_vectorized_formatter_parity(spark):
 
 def test_roundtrip_parses_back(spark):
     docs = format_bronze_documents(spark.createDataFrame(_CASES, _SPEC_SCHEMA))
-    headers, premios = parse_draws(docs, strict=True)
+    headers, premios = parse_draws(docs)
     hdr = {r["file"]: r.asDict() for r in headers.collect()}
     assert hdr["a.txt"]["numero_sorteo"] == "123"
     assert hdr["a.txt"]["tipo_sorteo"] == "ORDINARIO"
@@ -213,8 +213,7 @@ def test_format_parse_roundtrip_property(spark, specs):
         for i, s in enumerate(specs)
     ]
     headers, premios = parse_draws(
-        spark.createDataFrame(docs, "file string, content string"),
-        strict=True,
+        spark.createDataFrame(docs, "file string, content string")
     )
     hdr = {r["file"]: r.asDict() for r in headers.collect()}
     for i, s in enumerate(specs):

@@ -5,6 +5,7 @@ Every incremental result is compared with a from-scratch run over the
 same 5-draw corpus: silver and all 7 gold tables, `exceptAll` empty
 both ways."""
 
+import re
 import shutil
 import threading
 
@@ -18,6 +19,7 @@ from lottery_end_to_end_etl_data_pipeline_spark.plans.pipeline import run_pipeli
 from tests.fixture_gen import write_fixture_corpus
 
 LAYOUT = "year=*/sorteo=*/*.txt"
+PRIZE_LINE = re.compile(r"(\d+)\s+(\w+)\s+\.+\s+([\d,]+\.?\d*)")
 TABLES = ["silver/sorteos", "silver/premios"] + [f"gold/{n}" for n in sorted(GOLD_TABLES)]
 
 
@@ -202,10 +204,17 @@ def test_killed_during_gold_converges(spark, backfilled, full, monkeypatch):
     _assert_same_tables(spark, root, full)
 
 
+def _node_names(plan):
+    """The node names of a Catalyst plan tree, root first."""
+    kids = plan.children()
+    return [plan.nodeName()] + [n for i in range(kids.size()) for n in _node_names(kids.apply(i))]
+
+
 def test_weekly_run_job_budget(spark, backfilled, monkeypatch):
-    """A weekly +1 run starts at most 24 Spark jobs, all in the
-    caller's job group (gold's concurrent writes included), and never
-    scans silver: its content guard is a filter on the listed ids."""
+    """A weekly +1 run starts at most 23 Spark jobs, all in the
+    caller's job group (gold's concurrent writes included), never
+    scans silver (its content guard is a filter on the listed ids) and
+    derives the premios partitions with no join."""
     root = backfilled
     write_fixture_corpus(root / "raw", n_draws=5, seed=3)
     sc, group = spark.sparkContext, "weekly-probe"
@@ -215,8 +224,9 @@ def test_weekly_run_job_budget(spark, backfilled, monkeypatch):
         _drain_listeners(spark)
         return list(tracker.getJobIdsForGroup(group))
 
-    guarded, partition_jobs = [], []
+    guarded, partition_jobs, written = [], [], []
     filter_unprocessed, with_partitions = pipeline.filter_unprocessed, pipeline.with_partitions
+    write_silver = pipeline.write_silver
 
     def recording_filter(df, done):
         guarded.append(filter_unprocessed(df, done))
@@ -228,8 +238,13 @@ def test_weekly_run_job_budget(spark, backfilled, monkeypatch):
         partition_jobs.append(len(group_jobs()) - before)
         return out
 
+    def recording_write(sorteos, premios, *args, **kwargs):
+        written.append(premios)
+        return write_silver(sorteos, premios, *args, **kwargs)
+
     monkeypatch.setattr(pipeline, "filter_unprocessed", recording_filter)
     monkeypatch.setattr(pipeline, "with_partitions", counting_partitions)
+    monkeypatch.setattr(pipeline, "write_silver", recording_write)
     _drain_listeners(spark)
     ungrouped = set(tracker.getJobIdsForGroup(None))
     sc.setJobGroup(group, "weekly +1 run_pipeline")
@@ -241,7 +256,22 @@ def test_weekly_run_job_budget(spark, backfilled, monkeypatch):
         sc.setLocalProperty("spark.job.description", None)
     # the tracker keeps only the latest jobs, so old ids may drop out
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
-    assert 0 < len(jobs) <= 24, jobs
+    assert 0 < len(jobs) <= 23, jobs
     assert partition_jobs == [1]
     assert len(guarded) == 2
     assert not [f for df in guarded for f in df.inputFiles() if "/silver/" in f]
+    [premios] = written
+    assert "Join" not in _node_names(premios._jdf.queryExecution().optimizedPlan())
+
+
+def test_draw_in_two_files_writes_each_prize_once_per_file(spark, tmp_path):
+    """A draw whose raw file arrives twice in a batch writes each
+    prize row once per file: the year partition comes from the row's
+    own draw date, so no join with the batch's sorteos multiplies it."""
+    path = write_fixture_corpus(tmp_path / "raw", n_draws=5, seed=3)[0]
+    shutil.copy(path, path.parent / "copy.txt")
+    prizes = sum(bool(PRIZE_LINE.match(line.strip())) for line in path.read_text().splitlines())
+    draw = pipeline._draw_id(str(path))
+    run_pipeline(spark, f"{tmp_path}/raw/{LAYOUT}", f"{tmp_path}/silver")
+    premios = spark.read.parquet(f"{tmp_path}/silver/premios")
+    assert premios.filter(f"sorteo = {draw}").count() == 2 * prizes > 0

@@ -104,7 +104,7 @@ def test_spark_extraction_round_trips_into_bronze_parser(spark):
 
     # scrape output IS bronze input: (file, content) -> parse_draws
     raw = extracted.selectExpr("file_name AS file", "document AS content")
-    sorteos, premios = parse_draws(raw, strict=True)
+    sorteos, premios = parse_draws(raw)
     srows = {int(r["numero_sorteo"]): r for r in sorteos.collect()}
     assert set(srows) == {4001}  # both pages are draw 4001
     assert srows[4001]["fecha_sorteo"] == "04/07/2024"

@@ -55,3 +55,7 @@ def test_container_path_missing_under_root_falls_back_to_root(tmp_path):
     # is not mounted inside the container; the root file still counts
     proc, root = _tree(tmp_path, ["0::/docker/abc"], {"memory.max": str(4 * GIB)})
     assert _cgroup_memory_limit(proc, root) == 4 * GIB
+
+
+def test_console_progress_bars_are_off(spark):
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
