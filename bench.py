@@ -287,8 +287,10 @@ HEADLINE = [
 # The reference's only published latency (BASELINE.md: p50 = 135 s,
 # p90 = 248 s) times its 7-gold-CTAS pipeline — NOT a 150-query
 # analytics suite. The apples-to-apples comparison is therefore the
-# sum over this engine's 7 gold-table builds; the full-suite total
-# above it measures breadth the reference cannot run at all.
+# sum over these 7 entries, which run the gold SQL the pipeline writes
+# (`operators/gold.py::GOLD_TABLES`) over a stand-in silver of about
+# 3,000 draws at sf0.1; the full-suite total above it measures breadth
+# the reference cannot run at all.
 REFERENCE_PIPELINE = [
     "gold_draw_summary_shape",
     "gold_frequency_shape",

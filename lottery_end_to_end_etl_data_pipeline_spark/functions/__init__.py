@@ -8,9 +8,6 @@ from lottery_end_to_end_etl_data_pipeline_spark.functions.expressions import (
     bin_by_width,
     calculate_odds,
     calculate_winning_percentage,
-    safe_pct,
-    safe_ratio,
-    terminacion,
     ticket_price,
 )
 
@@ -22,8 +19,5 @@ __all__ = [
     "bin_by_width",
     "calculate_odds",
     "calculate_winning_percentage",
-    "safe_pct",
-    "safe_ratio",
-    "terminacion",
     "ticket_price",
 ]

@@ -16,26 +16,6 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def terminacion(numero_premiado: Column | str) -> Column:
-    """Last-2-digit termination, zero-padded: 7 → '07', 109964 → '64'.
-
-    `% 100` (not substring) because numero_premiado is 1-6 digits
-    (`sql/gold/03_gold_terminations.sql:14-17,28`).
-    """
-    return F.lpad((_c(numero_premiado) % 100).cast("string"), 2, "0")
-
-
-def safe_ratio(num: Column | str, den: Column | str, scale: int = 2) -> Column:
-    """ROUND(num / NULLIF(den, 0), scale) — NULL when denominator is 0
-    (`sql/gold/01_gold_draw_summary.sql:40-43`)."""
-    return F.round(_c(num) / F.nullif(_c(den).cast("double"), F.lit(0.0)), scale)
-
-
-def safe_pct(num: Column | str, den: Column | str, scale: int = 2) -> Column:
-    """ROUND(100.0 * num / NULLIF(den, 0), scale)."""
-    return F.round(F.lit(100.0) * _c(num) / F.nullif(_c(den).cast("double"), F.lit(0.0)), scale)
-
-
 def bin_by_width(col: Column | str, width: int | float) -> Column:
     """Histogram bucket lower bound: floor(col / width) * width
     (EDA `pd.cut` with uniform bins, `EDA_premios.ipynb` cell 52)."""

@@ -47,6 +47,9 @@ from lottery_end_to_end_etl_data_pipeline_spark.schemas import (
     SORTEOS_COLUMNS,
     SORTEOS_SCHEMA,
 )
+from lottery_end_to_end_etl_data_pipeline_spark.sources.writers import (
+    write_parquet_partitioned,
+)
 
 
 def conform_premios(premios_raw: DataFrame) -> DataFrame:
@@ -130,14 +133,12 @@ def write_silver(
     silver_path: str,
     mode: str = "overwrite",
 ) -> None:
-    """S6 sink: silver as Hive-partitioned (year, sorteo) parquet. The
-    reference's flat per-draw 'simple bucket' (S5) is
+    """S6 sink: silver as Hive-partitioned (year, sorteo) parquet,
+    through `sources/writers.py::write_parquet_partitioned`, whose
+    per-write dynamic partition overwrite makes incremental re-runs
+    rewrite only the partitions present in the batch. The reference's
+    flat per-draw 'simple bucket' (S5) is
     `sources/writers.py::write_parquet_flat`.
-
-    Dynamic partition overwrite is set per-write so incremental
-    re-runs only rewrite the partitions present in the batch, even
-    under a foreign SparkSession whose `partitionOverwriteMode` is
-    left at the static default (which would wipe the whole table).
 
     Premios are written before sorteos, so a `sorteo=N` partition of
     silver sorteos means draw N is complete: a run killed between the
@@ -148,12 +149,11 @@ def write_silver(
         ("premios", premios, PREMIOS_COLUMNS),
         ("sorteos", sorteos, SORTEOS_COLUMNS),
     ):
-        (
-            df.select(*columns, "year", "sorteo")
-            .write.mode(mode)
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("year", "sorteo")
-            .parquet(f"{silver_path}/{name}")
+        write_parquet_partitioned(
+            df.select(*columns, "year", "sorteo"),
+            f"{silver_path}/{name}",
+            ["year", "sorteo"],
+            mode,
         )
 
 

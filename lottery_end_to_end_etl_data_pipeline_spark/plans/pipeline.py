@@ -26,6 +26,8 @@ silver views and returns: it reads, writes and rebuilds nothing.
 As in the reference, a raw file missing a sentinel or a required
 header field (`parse_draws`), or a draw whose fecha_sorteo does not
 parse (`with_partitions`), fails the run before anything is written.
+So does a new draw id listed under more than one raw file, before any
+file is read: neither copy is taken as the draw.
 Each premio row carries its draw's fecha_sorteo from the parse, so both
 silver tables take their year partition from their own rows.
 """
@@ -133,6 +135,15 @@ def run_pipeline(
     silver_exists = fs.exists(silver_sorteos)
     done = _silver_draw_ids(spark, silver_path)
     new_files = [f for f in raw_files if _draw_id(f) not in done]
+    files_of: dict[int, list[str]] = {}
+    for f in new_files:
+        if (i := _draw_id(f)) is not None:
+            files_of.setdefault(i, []).append(f)
+    split = "; ".join(
+        f"sorteo={i}: {', '.join(fs)}" for i, fs in sorted(files_of.items()) if len(fs) > 1
+    )
+    if split:
+        raise ValueError(f"More than one raw file for {split}. Cannot tell which holds the draw.")
 
     n_draws = n_premios = 0
     if new_files or not silver_exists:

@@ -37,11 +37,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from lottery_end_to_end_etl_data_pipeline_spark.functions.expressions import (
-    safe_pct,
-    terminacion,
-    ticket_price,
-)
+from lottery_end_to_end_etl_data_pipeline_spark.functions.expressions import ticket_price
+from lottery_end_to_end_etl_data_pipeline_spark.operators.gold import GOLD_TABLES
 from lottery_end_to_end_etl_data_pipeline_spark.sources.readers import footer_schema
 
 TABLES = [
@@ -243,210 +240,77 @@ def query(name: str, oracle: str | None = None):
 
 
 # ---------------------------------------------------------------------------
-# Gold-table analogs (SURVEY §2.5 A1-A7) — the reference's 7 aggregate
-# queries, same operator shapes, over orders/lineitem.
+# The 7 gold tables (SURVEY §2.5 A1-A7): `operators/gold.py::GOLD_TABLES`'
+# SQL text, the text the pipeline writes, over a stand-in silver
+# projected from lineitem (premios) and orders (sorteos).
 # ---------------------------------------------------------------------------
 
-@query(
-    "gold_draw_summary_shape",
-    oracle="""
-    SELECT o.o_orderstatus AS orderstatus,
-           o.o_orderpriority AS orderpriority,
-           COUNT(l.l_partkey) AS total_items,
-           COUNT(l.l_partkey) FILTER (WHERE l.l_returnflag <> 'R') AS items_kept,
-           COUNT(l.l_partkey) FILTER (WHERE l.l_returnflag = 'R') AS items_returned,
-           ROUND(100.0 * COUNT(l.l_partkey) FILTER (WHERE l.l_returnflag <> 'R')
-                 / NULLIF(COUNT(l.l_partkey), 0), 2) AS pct_kept,
-           ROUND(SUM(l.l_extendedprice), 2) AS total_price,
-           ROUND(SUM(l.l_extendedprice) FILTER (WHERE l.l_returnflag <> 'R'), 2) AS price_kept,
-           ROUND(MAX(l.l_extendedprice), 2) AS top_price
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderstatus, o.o_orderpriority
-    """,
+#: Stand-in silver: name → (source table, draw subset, column
+#: expressions). The same text runs as `selectExpr` on Spark and as the
+#: oracle's `WITH` prelude on DuckDB. `monto` is integer-valued, so the
+#: gold text's unrounded SUMs are exact in any order on either engine.
+#: The 1-in-50 draw subset keeps ~300 draws at sf0.01, the size of the
+#: reference's corpus; without it `gold_draw_summary` is one row per
+#: order.
+_STAND_IN_SILVER = {
+    "premios": ("lineitem", "l_orderkey % 50 = 0", (
+        "l_orderkey AS numero_sorteo",
+        "l_partkey AS numero_premiado",
+        "l_returnflag AS letras",
+        "CAST(FLOOR(l_extendedprice) AS DOUBLE) AS monto",
+        "CASE WHEN l_linenumber % 4 = 0 THEN 'NO VENDIDO'"
+        " ELSE 'V' || CAST(l_suppkey AS STRING) END AS vendedor",
+        "'C' || CAST(l_partkey % 7 AS STRING) AS ciudad",
+        "'D' || CAST(l_suppkey % 22 AS STRING) AS departamento",
+    )),
+    "sorteos": ("orders", "o_orderkey % 50 = 0", (
+        "o_orderkey AS numero_sorteo",
+        "o_orderpriority AS tipo_sorteo",
+        "CAST(o_orderdate AS DATE) AS fecha_sorteo",
+    )),
+}
+_STAND_IN_PRELUDE = "WITH " + ",\n     ".join(
+    f"{name} AS (SELECT {', '.join(exprs)} FROM {table} WHERE {subset})"
+    for name, (table, subset, exprs) in _STAND_IN_SILVER.items()
 )
-def gold_draw_summary_shape(spark, sf_dir):
-    """A1: COUNT-FILTER / SUM-FILTER / NULLIF-pct rollup (sql/gold/01).
-    Scale: hash agg w/ map-side partial; join shuffles on orderkey —
-    at 100 TB both sides co-shuffle; AQE handles skew."""
-    o = t(spark, sf_dir, "orders")
-    l = t(spark, sf_dir, "lineitem")
-    kept = F.col("l_returnflag") != "R"
-    return (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .groupBy(
-            F.col("o_orderstatus").alias("orderstatus"),
-            F.col("o_orderpriority").alias("orderpriority"),
+
+#: catalog entry → the `GOLD_TABLES` table it runs.
+GOLD_ENTRIES = {
+    "gold_draw_summary_shape": "gold_draw_summary",
+    "gold_frequency_shape": "gold_winning_number_frequency",
+    "gold_terminations_shape": "gold_terminations",
+    "gold_letters_shape": "gold_letters_distribution",
+    "gold_geo_shape": "gold_geo_winnings",
+    "gold_leaderboard_shape": "gold_vendor_leaderboard",
+    "gold_time_series_shape": "gold_time_series",
+}
+
+
+def _stand_in(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    table, subset, exprs = _STAND_IN_SILVER[name]
+    return t(spark, sf_dir, table).filter(subset).selectExpr(*exprs)
+
+
+def _gold_entry(entry: str, gold: str) -> None:
+    """Register `entry`: gold table `gold`'s SQL text over the stand-in
+    silver, checked by DuckDB running the same text after the stand-in's
+    `WITH` prelude. Scale notes are `operators/gold.py`'s: hash
+    aggregates with map-side partial agg, and the joins broadcast the
+    one-row-per-draw sorteos on size."""
+    text = GOLD_TABLES[gold][0]
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(
+            text,
+            premios=_stand_in(spark, sf_dir, "premios"),
+            sorteos=_stand_in(spark, sf_dir, "sorteos"),
         )
-        .agg(
-            F.count("l_partkey").alias("total_items"),
-            F.count(F.when(kept, F.col("l_partkey"))).alias("items_kept"),
-            F.count(F.when(~kept, F.col("l_partkey"))).alias("items_returned"),
-            safe_pct(
-                F.count(F.when(kept, F.col("l_partkey"))), F.count("l_partkey")
-            ).alias("pct_kept"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
-            F.round(F.sum(F.when(kept, F.col("l_extendedprice"))), 2).alias("price_kept"),
-            F.round(F.max("l_extendedprice"), 2).alias("top_price"),
-        )
-    )
+
+    query(entry, _STAND_IN_PRELUDE + text.format(premios="premios", sorteos="sorteos"))(build)
 
 
-@query(
-    "gold_frequency_shape",
-    oracle="""
-    SELECT l_partkey AS partkey,
-           COUNT(*) AS times_seen,
-           ROUND(SUM(l_extendedprice), 2) AS total_price,
-           ROUND(MAX(l_extendedprice), 2) AS max_price
-    FROM lineitem WHERE l_partkey IS NOT NULL
-    GROUP BY l_partkey
-    """,
-)
-def gold_frequency_shape(spark, sf_dir):
-    """A2: frequency table (sql/gold/02). Single hash agg, no join."""
-    return (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey").isNotNull())
-        .groupBy(F.col("l_partkey").alias("partkey"))
-        .agg(
-            F.count(F.lit(1)).alias("times_seen"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
-            F.round(F.max("l_extendedprice"), 2).alias("max_price"),
-        )
-    )
-
-
-@query(
-    "gold_terminations_shape",
-    oracle="""
-    SELECT LPAD(CAST(l_partkey % 100 AS VARCHAR), 2, '0') AS terminacion,
-           COUNT(*) AS times_seen,
-           ROUND(SUM(l_extendedprice), 2) AS total_price
-    FROM lineitem WHERE l_partkey IS NOT NULL
-    GROUP BY LPAD(CAST(l_partkey % 100 AS VARCHAR), 2, '0')
-    """,
-)
-def gold_terminations_shape(spark, sf_dir):
-    """A3+F13: modulo+lpad derived grouping key (sql/gold/03:28)."""
-    return (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey").isNotNull())
-        .groupBy(terminacion("l_partkey").alias("terminacion"))
-        .agg(
-            F.count(F.lit(1)).alias("times_seen"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
-        )
-    )
-
-
-@query(
-    "gold_letters_shape",
-    oracle="""
-    SELECT l_returnflag AS flag, COUNT(*) AS times_seen,
-           ROUND(SUM(l_extendedprice), 2) AS total_price
-    FROM lineitem WHERE l_returnflag IS NOT NULL
-    GROUP BY l_returnflag
-    """,
-)
-def gold_letters_shape(spark, sf_dir):
-    """A4: low-cardinality categorical rollup (sql/gold/04)."""
-    return (
-        t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_returnflag").isNotNull())
-        .groupBy(F.col("l_returnflag").alias("flag"))
-        .agg(
-            F.count(F.lit(1)).alias("times_seen"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
-        )
-    )
-
-
-@query(
-    "gold_geo_shape",
-    oracle="""
-    SELECT n.n_name AS nation, year(o.o_orderdate) AS year,
-           COUNT(*) AS num_orders,
-           ROUND(SUM(o.o_totalprice), 2) AS total_price
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    WHERE o.o_orderstatus <> 'F' AND o.o_orderdate IS NOT NULL
-    GROUP BY n.n_name, year(o.o_orderdate)
-    """,
-)
-def gold_geo_shape(spark, sf_dir):
-    """A5+J1+F14: fact⋈dim⋈dim with year extraction (sql/gold/05).
-    Scale: customer/nation broadcast (dims ≪ fact); single shuffle
-    for the final agg."""
-    o = t(spark, sf_dir, "orders")
-    c = t(spark, sf_dir, "customer")
-    n = t(spark, sf_dir, "nation")
-    return (
-        o.filter((F.col("o_orderstatus") != "F") & F.col("o_orderdate").isNotNull())
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("year"))
-        .agg(
-            F.count(F.lit(1)).alias("num_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
-
-
-@query(
-    "gold_leaderboard_shape",
-    oracle="""
-    SELECT s.s_name AS supplier, year(l.l_shipdate) AS year,
-           COUNT(*) AS num_items,
-           ROUND(SUM(l.l_extendedprice), 2) AS total_price
-    FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    WHERE s.s_name IS NOT NULL AND l.l_shipdate IS NOT NULL
-    GROUP BY s.s_name, year(l.l_shipdate)
-    """,
-)
-def gold_leaderboard_shape(spark, sf_dir):
-    """A6: leaderboard by entity x year (sql/gold/06). Supplier dim
-    broadcast."""
-    l = t(spark, sf_dir, "lineitem")
-    s = t(spark, sf_dir, "supplier")
-    return (
-        l.filter(F.col("l_shipdate").isNotNull())
-        .join(F.broadcast(s.filter(F.col("s_name").isNotNull())), l.l_suppkey == s.s_suppkey)
-        .groupBy(F.col("s_name").alias("supplier"), F.year("l_shipdate").alias("year"))
-        .agg(
-            F.count(F.lit(1)).alias("num_items"),
-            F.round(F.sum("l_extendedprice"), 2).alias("total_price"),
-        )
-    )
-
-
-@query(
-    "gold_time_series_shape",
-    oracle="""
-    SELECT year(o_orderdate) AS year, month(o_orderdate) AS month,
-           COUNT(DISTINCT o_custkey) AS num_customers,
-           COUNT(o_orderkey) AS num_orders,
-           ROUND(SUM(o_totalprice), 2) AS total_price
-    FROM orders WHERE o_orderdate IS NOT NULL
-    GROUP BY year(o_orderdate), month(o_orderdate)
-    """,
-)
-def gold_time_series_shape(spark, sf_dir):
-    """A7: monthly time series w/ COUNT DISTINCT (sql/gold/07).
-    Scale: distinct-agg expands then re-aggregates; Spark plans
-    partial distinct automatically."""
-    return (
-        t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderdate").isNotNull())
-        .groupBy(
-            F.year("o_orderdate").alias("year"), F.month("o_orderdate").alias("month")
-        )
-        .agg(
-            F.countDistinct("o_custkey").alias("num_customers"),
-            F.count("o_orderkey").alias("num_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-    )
+for _entry, _gold in GOLD_ENTRIES.items():
+    _gold_entry(_entry, _gold)
 
 
 # ---------------------------------------------------------------------------
@@ -7997,7 +7861,7 @@ def schema_evolution_roundtrip(spark, sf_dir):
     writes (doc_id, lang), batch 2 writes (doc_id, lang, n_chars) —
     the upstream-added-a-column scenario — then
     `read_parquet_evolving` (mergeSchema footer union) surfaces the
-    old files' missing column as NULL and `align_to_schema` conforms
+    old files' missing column as NULL and `align_schema` conforms
     the union to the table contract. The oracle predicts the exact
     null accounting from the source table, so a dropped column, a
     misaligned cast, or rows lost in the merge all break the hash.
@@ -8008,10 +7872,8 @@ def schema_evolution_roundtrip(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from lottery_end_to_end_etl_data_pipeline_spark.sources.readers import (
-        align_to_schema,
-        read_parquet_evolving,
-    )
+    from lottery_end_to_end_etl_data_pipeline_spark.functions.coercion import align_schema
+    from lottery_end_to_end_etl_data_pipeline_spark.sources.readers import read_parquet_evolving
 
     docs = t(spark, sf_dir, "documents")
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
@@ -8030,7 +7892,7 @@ def schema_evolution_roundtrip(spark, sf_dir):
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    conformed = align_to_schema(merged, target)
+    conformed = align_schema(merged, target)
     return conformed.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.count("lang").cast("long").alias("n_lang"),

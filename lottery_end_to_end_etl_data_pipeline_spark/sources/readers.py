@@ -217,23 +217,6 @@ def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:
     (metadata pass, not data); at 100 TB-many files pin the merged
     schema once via this reader, persist it, then reopen with an
     explicit `.schema(...)` on the hot path. Renames/type-changes are
-    NOT additive — those need `align_to_schema` below."""
+    NOT additive — those need `functions/coercion.py::align_schema`."""
     return spark.read.option("mergeSchema", "true").parquet(*paths)
 
-
-def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project `df` onto `target`: missing columns become typed NULLs,
-    extra columns drop, matching columns cast to the target type —
-    the write-side half of schema evolution (conform heterogeneous
-    batches to the table contract before an append/upsert). Pure
-    projection: no shuffle, stays inside whole-stage codegen."""
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    have = {f.name: f for f in df.schema.fields}
-    cols = []
-    for field in target.fields:
-        if field.name in have:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)

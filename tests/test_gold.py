@@ -2,14 +2,17 @@
 cross-checked three ways on the same silver parquet: the gold table
 Spark wrote, that table read back by DuckDB, and DuckDB running the
 identical SQL text as an oracle (the reference's intended correctness
-contract, SURVEY §5). The written schemas are pinned too."""
+contract, SURVEY §5). The written schemas are pinned too, and the 7
+`gold_*_shape` catalog entries are held to the same SQL text."""
 
 import duckdb
 import pytest
 from pyspark.sql.types import StructType
 
+from bench import WARM_SF as SF
 from lottery_end_to_end_etl_data_pipeline_spark.operators.gold import GOLD_TABLES
 from lottery_end_to_end_etl_data_pipeline_spark.plans.pipeline import run_pipeline
+from lottery_end_to_end_etl_data_pipeline_spark.plans.testdata_queries import ORACLE, QUERIES
 
 from tests.compare import assert_same, duck_rows
 
@@ -30,6 +33,18 @@ GOLD_SCHEMAS = {
     "gold_vendor_leaderboard": "vendedor STRING, num_premios BIGINT, total_monto DOUBLE, year INT",
     "gold_time_series": "month INT, num_sorteos BIGINT, num_premios BIGINT, "
     "total_monto DOUBLE, year INT",
+}
+
+
+#: The 7 catalog entries and the gold table whose SQL text each runs.
+CATALOG_GOLD = {
+    "gold_draw_summary_shape": "gold_draw_summary",
+    "gold_frequency_shape": "gold_winning_number_frequency",
+    "gold_terminations_shape": "gold_terminations",
+    "gold_letters_shape": "gold_letters_distribution",
+    "gold_geo_shape": "gold_geo_winnings",
+    "gold_leaderboard_shape": "gold_vendor_leaderboard",
+    "gold_time_series_shape": "gold_time_series",
 }
 
 
@@ -94,3 +109,21 @@ def test_incremental_picks_up_new_draw(spark, tmp_path):
     assert third.new_draws == 1
     # silver now holds all 5 exactly once
     assert spark.read.parquet(str(tmp_path / "silver/sorteos")).count() == 5
+
+
+@pytest.fixture(scope="module")
+def catalog_tables():
+    con = duckdb.connect()
+    for table in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{SF}/{table}.parquet')")
+    return con
+
+
+@pytest.mark.parametrize("entry", sorted(CATALOG_GOLD))
+def test_catalog_entry_runs_the_gold_text(spark, catalog_tables, entry):
+    """The entry's oracle is its gold table's SQL text, verbatim, over
+    the stand-in silver, and the entry gives the same rows on Spark."""
+    text = GOLD_TABLES[CATALOG_GOLD[entry]][0]
+    assert text.format(premios="premios", sorteos="sorteos") in ORACLE[entry]
+    oracle = catalog_tables.sql(ORACLE[entry])
+    assert_same(QUERIES[entry](spark, SF), oracle, label=f"{entry}: Spark vs DuckDB")

@@ -5,7 +5,6 @@ Every incremental result is compared with a from-scratch run over the
 same 5-draw corpus: silver and all 7 gold tables, `exceptAll` empty
 both ways."""
 
-import re
 import shutil
 import threading
 
@@ -19,7 +18,6 @@ from lottery_end_to_end_etl_data_pipeline_spark.plans.pipeline import run_pipeli
 from tests.fixture_gen import write_fixture_corpus
 
 LAYOUT = "year=*/sorteo=*/*.txt"
-PRIZE_LINE = re.compile(r"(\d+)\s+(\w+)\s+\.+\s+([\d,]+\.?\d*)")
 TABLES = ["silver/sorteos", "silver/premios"] + [f"gold/{n}" for n in sorted(GOLD_TABLES)]
 
 
@@ -264,14 +262,19 @@ def test_weekly_run_job_budget(spark, backfilled, monkeypatch):
     assert "Join" not in _node_names(premios._jdf.queryExecution().optimizedPlan())
 
 
-def test_draw_in_two_files_writes_each_prize_once_per_file(spark, tmp_path):
-    """A draw whose raw file arrives twice in a batch writes each
-    prize row once per file: the year partition comes from the row's
-    own draw date, so no join with the batch's sorteos multiplies it."""
+def test_draw_in_two_files_is_rejected_before_any_read(spark, tmp_path, monkeypatch):
+    """A new draw id listed under two raw files fails the run before
+    any raw file is read, naming the id and both files, and writes
+    nothing: neither copy is taken as the draw, so gold cannot count
+    its prizes twice."""
     path = write_fixture_corpus(tmp_path / "raw", n_draws=5, seed=3)[0]
-    shutil.copy(path, path.parent / "copy.txt")
-    prizes = sum(bool(PRIZE_LINE.match(line.strip())) for line in path.read_text().splitlines())
+    copy = path.parent / "copy.txt"
+    shutil.copy(path, copy)
     draw = pipeline._draw_id(str(path))
-    run_pipeline(spark, f"{tmp_path}/raw/{LAYOUT}", f"{tmp_path}/silver")
-    premios = spark.read.parquet(f"{tmp_path}/silver/premios")
-    assert premios.filter(f"sorteo = {draw}").count() == 2 * prizes > 0
+    reads = []
+    monkeypatch.setattr(pipeline, "read_raw_draws", lambda *a: reads.append(a))
+    with pytest.raises(ValueError, match=f"sorteo={draw}") as err:
+        run_pipeline(spark, f"{tmp_path}/raw/{LAYOUT}", f"{tmp_path}/silver")
+    assert str(path) in str(err.value) and str(copy) in str(err.value)
+    assert reads == []
+    assert not (tmp_path / "silver").exists()

@@ -3,10 +3,8 @@
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lottery_end_to_end_etl_data_pipeline_spark.sources.readers import (
-    align_to_schema,
-    read_parquet_evolving,
-)
+from lottery_end_to_end_etl_data_pipeline_spark.functions.coercion import align_schema
+from lottery_end_to_end_etl_data_pipeline_spark.sources.readers import read_parquet_evolving
 from lottery_end_to_end_etl_data_pipeline_spark.streaming.incremental import (
     stream_upsert,
 )
@@ -81,7 +79,7 @@ def test_read_parquet_evolving_fills_missing_columns(spark, tmp_path):
     assert rows[1] is None and rows[2] == 0.9
 
 
-def test_align_to_schema_projects_and_casts(spark):
+def test_align_schema_projects_and_casts(spark):
     target = T.StructType(
         [
             T.StructField("id", T.LongType()),
@@ -92,7 +90,7 @@ def test_align_to_schema_projects_and_casts(spark):
     df = spark.createDataFrame(
         [(1, "2", "drop-me")], "id INT, score STRING, extra STRING"
     )
-    out = align_to_schema(df, target)
+    out = align_schema(df, target)
     assert [f.simpleString() for f in out.schema.fields] == [
         "id:bigint",
         "score:double",
@@ -116,7 +114,7 @@ def test_align_then_upsert_integration(spark, tmp_path):
     ).write.parquet(target_path)
     target_schema = spark.read.parquet(target_path).schema
     batch = spark.createDataFrame([(1, "0.9"), (2, "0.7")], "id INT, score STRING")
-    conformed = align_to_schema(batch, target_schema)
+    conformed = align_schema(batch, target_schema)
     upsert_by_key(spark, target_path, conformed, ["id"])
     got = {
         r["id"]: (r["score"], r["tag"])
